@@ -841,8 +841,9 @@ object CrawlLoop {
         case _ => Seq.empty
       }
       // sitemap XML carries no recognized page type; the reference link-
-      // scans it like any content (domaincache.py:130-167)
-      val isSitemap = resp.text.exists(t =>
+      // scans it like any content (domaincache.py:130-167). Lazy: only a
+      // page that is not parsed HTML pays for the two full-text scans.
+      lazy val isSitemap = resp.text.exists(t =>
         t.contains("<urlset") || t.contains("<sitemapindex"))
       val links: Seq[String] = parsed match {
         case Some(PageFactory.ParsedHtml(m)) =>

@@ -174,11 +174,6 @@ final case class SyntheticInternet(config: SyntheticConfig) extends Serializable
   def imageRowFor(k: Int, slot: Int): ImageRow =
     ImageKit.imageRow(config.seed, imageIndexOf(k, slot))
 
-  def imageUrlFor(k: Int, slot: Int): String = {
-    val row = imageRowFor(k, slot)
-    s"${siteRoot(k)}/img/${row.image_id}.${row.fmt}"
-  }
-
   private def imageFor(k: Int, path: String): Option[ImageRow] = {
     // /img/img00000003.jpeg
     val name = path.substring("/img/".length)

@@ -12,32 +12,71 @@ import graft.url.UrlKit
   * invalid-link removal. The reference computes but discards a final
   * `is_web_link` filter (contentlinkparser.py:42-47 returns the pre-filter
   * set) — reproduced here; frontier admission applies that filter later.
+  *
+  * Scanning. `Regex.findAllIn` runs `Matcher.find`, which attempts a match
+  * at every character of the page. Every match of the five link patterns
+  * starts with a fixed literal (`htt` for the four URL patterns, `href="`
+  * for the attribute pattern), and none of them uses an anchor or a
+  * lookaround. So a match can only start where the literal occurs, and
+  * `lookingAt` on the region starting there makes exactly the attempt
+  * `find` makes at that position. [[LinkPattern.matches]] therefore visits
+  * only the literal's occurrences (`String.indexOf`), and skips those that
+  * start before the previous match's end, as `find` resumes there: the
+  * result is the same non-overlapping matches, in the same order, as
+  * `findAllIn` on the same pattern.
   */
 object LinkExtractor {
 
-  private val rawPatterns: Map[String, Regex] = Map(
-    "https" -> raw"(https?://[a-zA-Z0-9./\-_?&=#;:]+)".r,
-    "http" -> raw"(http?://[a-zA-Z0-9./\-_?&=#;:]+)".r)
+  /** A link pattern whose every match starts with `literal`, and which has
+    * no anchors or lookarounds; group 1 is the extracted link. */
+  private[graft] final class LinkPattern(val literal: String, val regex: Regex) {
+    /** Group 1 of each match `regex.findAllMatchIn(contents)` yields, in
+      * the same order. */
+    def matches(contents: String): Seq[String] = {
+      val out = Vector.newBuilder[String]
+      val m = regex.pattern.matcher(contents)
+      val n = contents.length
+      var i = contents.indexOf(literal)
+      while (i >= 0) {
+        if (m.region(i, n).lookingAt()) {
+          out += m.group(1)
+          i = contents.indexOf(literal, m.end())
+        } else i = contents.indexOf(literal, i + 1)
+      }
+      out.result()
+    }
+  }
 
-  private val encodedPatterns: Map[String, Regex] = Map(
-    "https" -> raw"(https?:&#x2F;&#x2F;[a-zA-Z0-9./\-_?&=#;:]+)".r,
-    "http" -> raw"(http?:&#x2F;&#x2F;[a-zA-Z0-9./\-_?&=#;:]+)".r)
+  private[graft] val rawPatterns: Map[String, LinkPattern] = Map(
+    "https" -> new LinkPattern("htt",
+      raw"(https?://[a-zA-Z0-9./\-_?&=#;:]+)".r),
+    "http" -> new LinkPattern("htt",
+      raw"(http?://[a-zA-Z0-9./\-_?&=#;:]+)".r))
+
+  private[graft] val encodedPatterns: Map[String, LinkPattern] = Map(
+    "https" -> new LinkPattern("htt",
+      raw"(https?:&#x2F;&#x2F;[a-zA-Z0-9./\-_?&=#;:]+)".r),
+    "http" -> new LinkPattern("htt",
+      raw"(http?:&#x2F;&#x2F;[a-zA-Z0-9./\-_?&=#;:]+)".r))
+
+  private def stripTrailingDots(s: String): String =
+    s.substring(0, s.lastIndexWhere(_ != '.') + 1)
 
   /** Plain `https?://…` scan; trailing dots stripped
     * (contentlinkparser.py:90-98). */
   def linksRaw(contents: String, protocol: String = "https"): Set[String] =
-    rawPatterns(protocol).findAllIn(contents)
-      .map(_.reverse.dropWhile(_ == '.').reverse).toSet
+    rawPatterns(protocol).matches(contents).iterator
+      .map(stripTrailingDots).toSet
 
   /** Entity-encoded `https?:&#x2F;&#x2F;…` scan, decoded after match.
     * Returns a Seq — the reference returns a list here, duplicates intact
     * (contentlinkparser.py:100-110). */
   def linksEncoded(contents: String, protocol: String = "https"): Seq[String] =
-    encodedPatterns(protocol).findAllIn(contents)
-      .map(_.reverse.dropWhile(_ == '.').reverse)
-      .map(HtmlEntities.unescape).toSeq
+    encodedPatterns(protocol).matches(contents)
+      .map(l => HtmlEntities.unescape(stripTrailingDots(l)))
 
-  private val hrefPattern = raw"""href="([a-zA-Z0-9./\-_?&=@#;:]+)""".r
+  private[graft] val hrefPattern =
+    new LinkPattern("href=\"", raw"""href="([a-zA-Z0-9./\-_?&=@#;:]+)""".r)
   private val schemePrefix = raw"^[a-zA-Z0-9]+:".r
   private val userAtPrefix = raw"^[a-zA-Z0-9]+@".r
 
@@ -49,13 +88,14 @@ object LinkExtractor {
       case u    => UrlKit.noArgLink(u).orNull
     }
     val domain = UrlKit.domainFull(url).orNull
-    hrefPattern.findAllMatchIn(contents)
-      .flatMap(m => processAhrefItem(url, domain, m.group(1))).toSet
+    hrefPattern.matches(contents).iterator
+      .flatMap(processAhrefItem(url, domain, _)).toSet
   }
 
+  private val bareSchemes = Set("http://", "https://", "ftp://", "smb://")
+
   private def isLinkValid(link: String): Boolean =
-    link != null && link.nonEmpty &&
-      !Set("http://", "https://", "ftp://", "smb://").contains(link)
+    link != null && link.nonEmpty && !bareSchemes.contains(link)
 
   private def joinUrlParts(a0: String, b0: String): String = {
     val a = if (a0.endsWith("/")) a0 else a0 + "/"
@@ -99,21 +139,25 @@ object LinkExtractor {
     Some(item)
   }
 
+  private val suspiciousMarkers = Seq("\"", "<", ">", "&quot;", "&gt;", "&lt;")
+
   /** Truncate at the first of `"`, `<`, `>`, `&quot;`, `&gt;`, `&lt;`
     * — in that scan order — then trim (contentlinkparser.py:49-72). */
   def filterSuspicious(links: Set[String]): Set[String] =
     links.map { item0 =>
       var item = item0
-      Seq("\"", "<", ">", "&quot;", "&gt;", "&lt;").foreach { marker =>
+      suspiciousMarkers.foreach { marker =>
         val wh = item.indexOf(marker)
         if (wh != -1) item = item.substring(0, wh)
       }
       item.trim
     }
 
+  private val invalidLinks =
+    Set[String](null, "", "http", "https", "http://", "https://")
+
   /** Drop null/empty/bare-scheme artifacts (contentlinkparser.py:74-88). */
-  def filterInvalid(links: Set[String]): Set[String] =
-    links -- Set(null, "", "http", "https", "http://", "https://")
+  def filterInvalid(links: Set[String]): Set[String] = links -- invalidLinks
 
   /** The full union scan (contentlinkparser.py:30-47). */
   def links(pageUrl: String, contents: String): Set[String] = {

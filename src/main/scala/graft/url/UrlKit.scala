@@ -360,9 +360,6 @@ object UrlKit {
     domainFull(url).map(_ + "/robots.txt")
   }
 
-  def isLinkInDomain(url: String, address: String): Boolean =
-    domainFull(url).exists(address.startsWith)
-
   // --------------------------------------------------------- href resolve
 
   /** Resolve an href against a base — absolute / `//x` / `/x` / bare

@@ -1,7 +1,11 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.links.LinkExtractor
+import graft.fetch.{SyntheticConfig, SyntheticInternet}
+import graft.links.{HtmlEntities, LinkExtractor}
+import graft.links.LinkExtractor.LinkPattern
+import graft.url.UrlKit
 
 /** Golden vectors transcribed from the reference link-parser suite
   * (reference: tests/unit/test_contentlinkparser.py). */
@@ -129,6 +133,96 @@ class LinkExtractorSpec extends AnyFunSuite {
     assert(inner.forall(_.contains("test_get_links.com")))
     assert(outer.nonEmpty)
     assert((inner & outer).isEmpty)
+  }
+
+  // ---------------------------------------------------------- scan oracle
+
+  private val patterns: Seq[LinkPattern] =
+    LinkExtractor.rawPatterns.values.toSeq ++
+      LinkExtractor.encodedPatterns.values :+ LinkExtractor.hrefPattern
+
+  private def findAll(p: LinkPattern, s: String): Seq[String] =
+    p.regex.findAllMatchIn(s).map(_.group(1)).toSeq
+
+  private def stripDots(s: String): String = s.reverse.dropWhile(_ == '.').reverse
+
+  /** `links` as five full-page `findAllIn` scans — the form the literal-
+    * prefix scan replaced. */
+  private def oracleLinks(pageUrl: String, contents: String): Set[String] = {
+    def raw(p: String) =
+      findAll(LinkExtractor.rawPatterns(p), contents).map(stripDots).toSet
+    def encoded(p: String) = findAll(LinkExtractor.encodedPatterns(p), contents)
+      .map(stripDots).map(HtmlEntities.unescape)
+    val url = Option(pageUrl).flatMap(UrlKit.noArgLink).orNull
+    val domain = UrlKit.domainFull(url).orNull
+    val href = findAll(LinkExtractor.hrefPattern, contents)
+      .flatMap(LinkExtractor.processAhrefItem(url, domain, _)).toSet
+    val all = raw("https") ++ encoded("https") ++ raw("http") ++
+      encoded("http") ++ href
+    LinkExtractor.filterInvalid(LinkExtractor.filterSuspicious(all))
+  }
+
+  private val pageUrls = Seq(pageUrl, null, "https://")
+
+  /** Every pattern's scan equals `findAllIn`, every oracle match starts
+    * with the pattern's literal, and `links` equals the oracle union. */
+  private def sameAsOracle(s: String): Boolean =
+    patterns.forall { p =>
+      p.matches(s) == findAll(p, s) &&
+        p.regex.findAllIn(s).forall(_.startsWith(p.literal))
+    } && pageUrls.forall(u => LinkExtractor.links(u, s) == oracleLinks(u, s))
+
+  private val tokens = Seq("htt", "http", "https", "://", ":", "/", "//",
+    "&#x2F;", "href=\"", "\"", ".", "..", ";", "&", "#", "?", "=", "@",
+    "a", "b.com", "x-y_z", " ", "<", ">", "&quot;", "mailto:", "www.")
+
+  private val linkDense: Gen[String] =
+    Gen.listOf(Gen.oneOf(tokens)).map(_.mkString)
+
+  test("literal-prefix scan equals findAllIn on generated link-dense text") {
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(5000).withMaxSize(80),
+      Prop.forAll(linkDense)(sameAsOracle))
+    assert(result.passed, result.status.toString)
+  }
+
+  test("literal-prefix scan equals findAllIn on fixed edge cases") {
+    val cases = Seq(
+      "https://a.com/?u=https://b.com",
+      "hthttps://x", "htttp://x", "hhttps://x.org",
+      "https://a.com/https:&#x2F;&#x2F;b.com/c and http:&#x2F;&#x2F;d.org",
+      "see https://a.com/x... and http://b.org. or https://...",
+      "<a href=\"/page/1\">x</a> <a href=\"no/closing/quote",
+      "href=\"href=\"https://a.com\"", "href=\"\"", "", "htt", "https://")
+    cases.foreach(c => assert(sameAsOracle(c), c))
+
+    val nested = "https://a.com/?u=https://b.com"
+    assert(LinkExtractor.rawPatterns("https").matches(nested) == Seq(nested))
+    assert(LinkExtractor.rawPatterns("https").matches("hthttps://x") ==
+      Seq("https://x"))
+    assert(LinkExtractor.rawPatterns("http").matches("htttp://x").isEmpty)
+    assert(LinkExtractor.rawPatterns("http").matches("htt://x htthttp://y") ==
+      Seq("htt://x", "http://y"))
+    assert(LinkExtractor.linksRaw("see https://a.com/x... and https://...") ==
+      Set("https://a.com/x", "https://"))
+    assert(LinkExtractor.hrefPattern.matches("<a href=\"no/closing") ==
+      Seq("no/closing"))
+  }
+
+  test("links is unchanged on synthetic content pages (120 paragraphs)") {
+    val internet = SyntheticInternet(SyntheticConfig(
+      seed = 7L, nSites = 4, pagesPerSite = 12, itemsPerFeed = 3,
+      bodyParagraphs = 120))
+    val urls = for {
+      k <- 0 until 4
+      path <- Seq("/", "/feed", "/sitemap.xml", "/sitemap-pages.xml") ++
+        (0 until 12).map(i => s"/page/$i")
+    } yield s"https://site-$k.test$path"
+    val texts = urls.map(u => u -> internet.get(u).text.getOrElse(""))
+    assert(texts.count(_._2.length > 20000) >= 40)
+    texts.foreach { case (u, text) =>
+      assert(LinkExtractor.links(u, text) == oracleLinks(u, text), u)
+    }
   }
 
   test("statuses classification") {

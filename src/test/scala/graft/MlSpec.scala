@@ -309,9 +309,10 @@ class MlSpec extends AnyFunSuite {
 
   test("blocked CC rounds keep the exact maxIter accept/throw boundary") {
     import spark.implicits._
-    // r7 runs two propagation rounds per checkpoint; the contract must
-    // stay: a path of n nodes has its last label change at round n-1,
-    // so it converges iff n <= maxIter — pin both sides of the edge
+    // each round is one propagation step with its own checkpoint; the
+    // contract must stay: a path of n nodes has its last label change at
+    // round n-1, so it converges iff n <= maxIter — pin both sides of the
+    // edge
     val n = 6
     val nodes = (1L to n.toLong).toDF("id")
     val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
