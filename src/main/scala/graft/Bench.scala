@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.SparkSession
 import graft.crawl.{CrawlConfig, CrawlLoop}
 import graft.fetch.{SyntheticConfig, SyntheticInternet}
+import graft.parse.HtmlMeta
+import graft.links.LinkExtractor
 
 /** Benchmark main — ONE JSON line, emitted unconditionally, inside a
   * wall-clock budget:
@@ -55,7 +59,7 @@ import graft.fetch.{SyntheticConfig, SyntheticInternet}
   *    single-threaded, so k slots ≈ k single-core executors;
   *  - N=2 vs 4N=8 keeps both levels on distinct physical cores (the box
   *    is 32 hardware threads on 16 physical cores, so 8→32 conflates SMT
-  *    sharing with scaling — see CpuProbe);
+  *    sharing with scaling);
   *  - each level reports the best of its completed runs: the sandbox VM
   *    suffers intermittent CPU-steal bursts and min-time filters them;
   *    interleaving levels across reps exposes every level to the same
@@ -87,7 +91,7 @@ object Bench {
     t8Min.map(t8 => math.min(deadline0, math.max(4.6 * t8, 45.0)))
       .getOrElse(deadline0)
 
-  private def buildSession(threads: Int): SparkSession = {
+  private[graft] def buildSession(threads: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$threads]")
       .config("spark.sql.shuffle.partitions", threads.toString)
@@ -97,6 +101,39 @@ object Bench {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private def work(internet: SyntheticInternet, i: Int): Int = {
+    val url = s"https://site-${i % 100}.test/page/${i % 60}"
+    val resp = internet.get(url)
+    val text = resp.text.getOrElse("")
+    val meta = new HtmlMeta(url, text)
+    val links = LinkExtractor.links(url, text)
+    meta.title.map(_.length).getOrElse(0) + links.size
+  }
+
+  /** Spark-free parallel-scaling probe of the raw fetch+parse work:
+    * pages/sec for `pages` synthetic generate + parse + link-extract
+    * units on `threads` plain threads. Separates "my code doesn't scale"
+    * from "Spark orchestration doesn't scale" from "this VM's memory
+    * bandwidth saturates". */
+  private def measure(threads: Int, pages: Int,
+      paragraphs: Int = 60): Double = {
+    val internet = SyntheticInternet(SyntheticConfig(
+      seed = 42L, nSites = 100, pagesPerSite = 60, imagesPerSite = 0,
+      itemsPerFeed = 3, bodyParagraphs = paragraphs))
+    (0 until 2000).foreach(work(internet, _)) // JIT warm
+    val pool = Executors.newFixedThreadPool(threads)
+    val sink = new AtomicInteger()
+    val t0 = System.nanoTime()
+    (0 until pages).foreach { i =>
+      pool.submit(new Runnable {
+        def run(): Unit = { sink.addAndGet(work(internet, i)); () }
+      })
+    }
+    pool.shutdown()
+    pool.awaitTermination(600, TimeUnit.SECONDS)
+    pages / ((System.nanoTime() - t0) / 1e9)
   }
 
   /** One crawl at a given slot count; returns (urlsFetched, seconds). */
@@ -146,8 +183,8 @@ object Bench {
     // ---- 1. Spark-free pipeline scaling (cheap, deterministic) ---------
     var pps2, pps8 = 0.0
     try {
-      pps2 = CpuProbe.measure(2, 8000)
-      pps8 = CpuProbe.measure(8, 8000)
+      pps2 = measure(2, 8000)
+      pps8 = measure(8, 8000)
     } catch { case _: Throwable => }
     val cpuEfficiency = if (pps2 > 0) (pps8 / pps2) / 4.0 else 0.0
 
@@ -212,10 +249,11 @@ object Bench {
     // ---- 3. crawl scaling within the remaining budget ------------------
     // No dedicated warmup crawl: a warmup is an unbounded budget hole
     // under this sandbox's CPU-steal bursts (round-3 lesson: one warmup
-    // took 46s clean and 428s stolen). CpuProbe + the query phase already
-    // warmed the URL/parse and codegen hot paths, and the first 32-slot
-    // measurement is min-of-reps-filtered anyway. SPARK_GRAFT_BENCH_WARMUPS
-    // can force warmup crawls back on (at quarter scale).
+    // took 46s clean and 428s stolen). The Spark-free `measure` + the query
+    // phase already warmed the URL/parse and codegen hot paths, and the
+    // first 32-slot measurement is min-of-reps-filtered anyway.
+    // SPARK_GRAFT_BENCH_WARMUPS can force warmup crawls back on (at
+    // quarter scale).
     // best (slots, sites) → (urls, min seconds); the report uses the
     // LARGEST sites with complete 2-and-8 data
     val best = scala.collection.mutable.Map[(Int, Int), (Long, Double)]()

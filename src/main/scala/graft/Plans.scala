@@ -1,39 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Prints formatted physical plans for the headline queries — the
-  * pushdown/broadcast/codegen audit (not part of the driver contract).
-  * Run: sbt "runMain graft.Plans /root/testdata/sf0.01" */
+/** Plan dump for the pushdown/broadcast/codegen audit and for the plan
+  * half of an A/B: writes the formatted physical plan of each named
+  * SparkEntry query, or of every query, to
+  * `<outDir>/<query>_<suffix>.txt`. The session is `graft.Bench`'s, at
+  * `SPARK_GRAFT_CPUS` slots, so the plans match the ones the bench runs.
+  * A query whose plan cannot be built is reported on stderr and the
+  * dump exits non-zero after writing the rest.
+  *
+  * Usage: sbt "runMain graft.Plans <sfDir> <outDir> <suffix> [query...]"
+  */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("q01_agg", "q02_join_broadcast", "q03_anti_join", "q04_topk_window",
-      "q06_ordered_coalesce", "q11_dedup_exact", "q15_minhash_lsh",
-      "q16_simhash", "q17_ngram_jaccard", "q18_ann_brute",
-      "q19_ann_ivf", "q24_embed_neardup", "q26_repetition")
-      .foreach { name =>
-      println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-    }
-    // the IVF centroid-sampling plan must be a map-only prefilter +
-    // TakeOrderedAndProject — no global Sort (VERDICT r1 "What's wrong" #4)
-    println("\n========== q19 centroid sampling ==========")
-    locally {
-      import org.apache.spark.sql.functions._
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      emb.select(col("vec_id").as("id"), col("embedding").as("v"))
-        .withColumn("h", xxhash64(col("id")))
-        .filter(pmod(col("h"), lit(64)) === 0)
-        .orderBy(col("h"), col("id")).limit(16)
-        .explain("formatted")
+    require(args.length >= 3,
+      "usage: graft.Plans <sfDir> <outDir> <suffix> [query...]")
+    val Array(sfDir, outDir, suffix) = args.take(3)
+    val names =
+      if (args.length > 3) args.drop(3).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Bench.buildSession(cpus)
+    new java.io.File(outDir).mkdirs()
+    val failed = names.filterNot { name =>
+      try {
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        val path = s"$outDir/${name}_$suffix.txt"
+        val w = new java.io.PrintWriter(path)
+        try w.println(plan) finally w.close()
+        System.err.println(s"[plans] wrote $path")
+        true
+      } catch { case t: Throwable =>
+        System.err.println(s"[plans] $name failed: ${t.getMessage}")
+        false
+      }
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -68,7 +68,6 @@ final case class CrawlConfig(
       * co-bucketed with the seen table's url_hash ranges, and capacity
       * scales with the range count instead of auto-disabling. */
     bloomRanges: Int = 1,
-    verbose: Boolean = false,
     startTime: Instant = Instant.parse("2024-01-01T00:00:00Z"),
     /** robots-gate UA — the reference checks the request's agent, not "*"
       * (baseurl.py:221-223). */
@@ -261,14 +260,6 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       if (doneParts.isEmpty) pendingView
       else unionAll(doneParts.toSeq).unionByName(pendingView)
 
-    def timed[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val out = body
-      if (config.verbose)
-        println(f"[crawl] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      out
-    }
-
     // ---- seen-set Bloom accelerator ------------------------------------
     // Populated by a pass-through tap on url_hash inside the seen-delta
     // checkpoint job (no dedicated aggregation pass). Partitioned into
@@ -447,7 +438,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       //      row count rides along as an observed metric (a scalar — the
       //      batch's hosts stay distributed) --------------------------
       val obsDequeue = org.apache.spark.sql.Observation()
-      val (dequeued, n) = timed(s"b$batch dequeue") {
+      val (dequeued, n) = {
         // shard gate: only this instance's host-hash range dequeues;
         // out-of-range rows stay pending for the shard that owns them
         val eligible =
@@ -480,9 +471,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             if (rulesParts.isEmpty) batchHostsDf
             else batchHostsDf.join(rulesView.select("host"),
               Seq("host"), "left_anti")
-          val (newRules, newCount) = timed(s"b$batch robots-fetch") {
-            fetchRobots(missing, batch, parts)
-          }
+          val (newRules, newCount) = fetchRobots(missing, batch, parts)
           counterRows += ((batch, "robots_fetched", newCount))
           if (newCount > 0) {
             rulesParts += newRules
@@ -525,7 +514,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           else spark.sessionState.conf.numShufflePartitions
         val internetL = internet
         val cfg = config
-        val fetched: Dataset[FetchedPage] = timed(s"b$batch fetch+parse") {
+        val fetched: Dataset[FetchedPage] =
           toFetch
             .select("url", "url_hash", "host", "host_hash_salted", "seq")
             .repartition(parts, col("host_hash_salted"))
@@ -534,7 +523,6 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             .mapPartitions { it =>
               CrawlLoop.fetchAndParse(it, internetL, cfg)
             }.localCheckpoint(true) // the ONE materialization of the batch
-        }
 
         // per-batch outputs are lazy views over the checkpointed batch
         logParts += fetched
@@ -601,12 +589,11 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           .withColumn("ver", lit(batch + 1))
           .withColumn("src", lit("link"))
         val obsDelta = org.apache.spark.sql.Observation()
-        val delta = timed(s"b$batch links-dedup") {
+        val delta =
           tapped(freshRows.unionByName(redirCredit,
               allowMissingColumns = true))
             .observe(obsDelta, count(lit(1)).as("n"))
             .localCheckpoint(true)
-        }
         admitted.unpersist()
         val deltaN = obsDelta.get("n").asInstanceOf[Long]
         counterRows += ((batch, "links_seen_delta", deltaN))
@@ -666,12 +653,11 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // deterministic (fetched_batch, host) order makes eviction
         // reproducible across runs.
         if (rulesCount > config.robotsCacheSize) {
-          val compacted = timed(s"b$batch rules-evict") {
+          val compacted =
             rulesView
               .orderBy(col("fetched_batch").desc, col("host").desc)
               .limit(config.robotsCacheSize)
               .localCheckpoint(true)
-          }
           rulesParts.clear()
           rulesParts += compacted
           rulesCount = config.robotsCacheSize
@@ -694,36 +680,32 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           def commitSlice(table: String, parts: Seq[DataFrame]): Unit =
             if (parts.nonEmpty)
               s.commit(table, batch, unionAll(parts), lineage)
-          timed(s"b$batch delta-commit") {
-            commitSlice("frontier_pending_delta",
-              pendingParts.drop(pendMark).toSeq)
-            commitSlice("frontier_done_delta",
-              doneParts.drop(doneMark).toSeq)
-            commitSlice("frontier_dequeued_keys",
-              dequeuedKeyParts.drop(dkMark).toSeq)
-            commitSlice("frontier_redirect_tombstones",
-              redirectTombstoneParts.drop(rtMark).toSeq)
-            commitSlice("seen_delta", seenParts.drop(seenMark).toSeq)
-            commitSlice("crawl_log_delta", logParts.drop(logMark).toSeq)
-          }
+          commitSlice("frontier_pending_delta",
+            pendingParts.drop(pendMark).toSeq)
+          commitSlice("frontier_done_delta",
+            doneParts.drop(doneMark).toSeq)
+          commitSlice("frontier_dequeued_keys",
+            dequeuedKeyParts.drop(dkMark).toSeq)
+          commitSlice("frontier_redirect_tombstones",
+            redirectTombstoneParts.drop(rtMark).toSeq)
+          commitSlice("seen_delta", seenParts.drop(seenMark).toSeq)
+          commitSlice("crawl_log_delta", logParts.drop(logMark).toSeq)
           if ((batch + 1) % config.compactEvery == 0) {
-            timed(s"b$batch base-compact") {
-              s.commit("frontier", batch, frontierView, lineage)
-              s.commit("seen", batch, seenView, lineage)
-              s.commit("crawl_log", batch, unionAll(logParts.toSeq),
-                lineage)
-              val fr = s.read(spark, "frontier", Some(batch)).get
-              pendingParts.clear()
-              pendingParts += fr.filter(
-                col("state") === FrontierRow.StatePending)
-              doneParts.clear()
-              doneParts += fr.filter(
-                col("state") =!= FrontierRow.StatePending)
-              dequeuedKeyParts.clear()
-              redirectTombstoneParts.clear()
-              seenParts.clear()
-              seenParts += s.read(spark, "seen", Some(batch)).get
-            }
+            s.commit("frontier", batch, frontierView, lineage)
+            s.commit("seen", batch, seenView, lineage)
+            s.commit("crawl_log", batch, unionAll(logParts.toSeq),
+              lineage)
+            val fr = s.read(spark, "frontier", Some(batch)).get
+            pendingParts.clear()
+            pendingParts += fr.filter(
+              col("state") === FrontierRow.StatePending)
+            doneParts.clear()
+            doneParts += fr.filter(
+              col("state") =!= FrontierRow.StatePending)
+            dequeuedKeyParts.clear()
+            redirectTombstoneParts.clear()
+            seenParts.clear()
+            seenParts += s.read(spark, "seen", Some(batch)).get
           }
           // the marker is written LAST: a batch is durable iff its
           // marker exists (resume anchors on it — see runInternal)
@@ -765,16 +747,14 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           // — one O(|state|) rewrite amortized over K O(batch) appends;
           // bakes the lazy transitions and tombstones into one part each
           if (n > 0 && (batch + 1) % config.compactEvery == 0) {
-            timed(s"b$batch compact") {
-              val compacted = pendingView.localCheckpoint(true)
-              pendingParts.clear()
-              pendingParts += compacted
-              dequeuedKeyParts.clear()
-              redirectTombstoneParts.clear()
-              val seenCompacted = seenView.localCheckpoint(true)
-              seenParts.clear()
-              seenParts += seenCompacted
-            }
+            val compacted = pendingView.localCheckpoint(true)
+            pendingParts.clear()
+            pendingParts += compacted
+            dequeuedKeyParts.clear()
+            redirectTombstoneParts.clear()
+            val seenCompacted = seenView.localCheckpoint(true)
+            seenParts.clear()
+            seenParts += seenCompacted
           }
       }
     }

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -13,6 +13,16 @@ import org.apache.spark.util.sketch.BloomFilter
   * through the exact anti-join. At 10^10-URL scale the filter absorbs the
   * overwhelmingly-common case (a link never seen before) at ~zero shuffle
   * cost; false positives only cost a join probe, never correctness.
+  *
+  * The filter tier is one design: the url_hash-range-partitioned Bloom
+  * below, populated by a task-side accumulator (one range is the
+  * single-filter case). No cuckoo or other deletable filter is used, by
+  * decision: a filter that supports deletes or expiry pays, in space and
+  * probe cost, for *windowed* membership (Learned Cuckoo Filter for
+  * sliding windows, SIGMOD 2023), and this seen set never expires — a
+  * URL once seen stays seen for the life of the crawl. The one windowed
+  * membership test in the engine, the streaming first-occurrence filter
+  * (`CrawlMetricsStream.firstOccurrences`), uses watermark state instead.
   */
 object SeenSet {
 
@@ -24,75 +34,6 @@ object SeenSet {
   def filterNewExact(candidates: DataFrame, seen: DataFrame): DataFrame =
     candidates.join(seen.select("url_hash", "url"), Seq("url_hash", "url"),
       "left_anti")
-
-  /** Bloom-accelerated path. `expectedSeen`/`fpp` size the filter; the
-    * exact anti-join still guards every "possibly seen" candidate. */
-  def filterNewBloom(candidates: DataFrame, seen: DataFrame,
-      expectedSeen: Long, fpp: Double = 0.01): DataFrame = {
-    if (expectedSeen <= 0) return filterNewExact(candidates, seen)
-    val bloom: BloomFilter =
-      seen.stat.bloomFilter(col("url_hash"), math.max(expectedSeen, 1000L), fpp)
-    filterNewWithBloom(candidates, seen, bloom)
-  }
-
-  /** Same split with a caller-maintained filter — the crawl loop merges a
-    * per-batch filter of the fresh URLs into one accumulated filter instead
-    * of rescanning the whole seen table every iteration. */
-  def filterNewWithBloom(candidates: DataFrame, seen: DataFrame,
-      bloom: BloomFilter): DataFrame = {
-    val spark = candidates.sparkSession
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((h: Long) => bloomBc.value.mightContainLong(h))
-    // candidates is read twice — callers pass a materialized (persisted or
-    // checkpointed) frame and own its lifecycle; persisting here would leak
-    val definitelyNew = candidates.filter(!mightContain(col("url_hash")))
-    val possiblySeen = candidates.filter(mightContain(col("url_hash")))
-    definitelyNew.unionByName(filterNewExact(possiblySeen, seen))
-  }
-
-  /** An empty filter sized for the run's URL budget; per-batch filters
-    * built with the same parameters merge into it with `mergeInPlace`. */
-  def newBloom(expectedTotal: Long, fpp: Double = 0.01): BloomFilter =
-    BloomFilter.create(math.max(expectedTotal, 1000L), fpp)
-
-  /** Bloom filter built as a task-side accumulator: the crawl loop taps
-    * every `url_hash` flowing through the seen-delta checkpoint, so the
-    * filter is populated inside a job that runs anyway — no separate
-    * `stat.bloomFilter` aggregation pass per batch. Properties that make
-    * an accumulator safe here: inserts are idempotent (task retries and
-    * speculative duplicates just re-set the same bits) and the driver only
-    * reads the value between jobs, after all task merges have landed.
-    * Allocation is lazy so an empty accumulator serializes in bytes, not
-    * filter-size. */
-  final class BloomAccumulator(expected: Long, fpp: Double = 0.01)
-      extends org.apache.spark.util.AccumulatorV2[Long, BloomFilter] {
-    private var filter: BloomFilter = null
-    override def isZero: Boolean = filter == null
-    override def copy(): BloomAccumulator = {
-      val c = new BloomAccumulator(expected, fpp)
-      if (filter != null) { c.ensure(); c.filter.mergeInPlace(filter) }
-      c
-    }
-    override def reset(): Unit = filter = null
-    /** Task serialization calls copyAndReset on the DRIVER-side instance;
-      * the default copy()+reset() would deep-copy the accumulated filter
-      * (MBs) just to discard it — ship a fresh empty accumulator instead. */
-    override def copyAndReset(): BloomAccumulator =
-      new BloomAccumulator(expected, fpp)
-    private def ensure(): Unit =
-      if (filter == null) filter = newBloom(expected, fpp)
-    override def add(h: Long): Unit = { ensure(); filter.putLong(h) }
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[Long, BloomFilter]): Unit =
-      if (!o.isZero) { ensure(); filter.mergeInPlace(o.value) }
-    /** Snapshot for broadcast — never exposes the live mutable filter. */
-    override def value: BloomFilter = {
-      ensure()
-      val snap = newBloom(expected, fpp)
-      snap.mergeInPlace(filter)
-      snap
-    }
-  }
 
   /** Hash-range-partitioned Bloom: R independent filters, each owning the
     * url_hash range `pmod(h, R) == r` — the 10^10-URL design scale path
@@ -119,6 +60,14 @@ object SeenSet {
     }
   }
 
+  /** The partitioned filter built as a task-side accumulator: the crawl
+    * loop taps every `url_hash` flowing through the seen-delta
+    * checkpoint, so the filter is populated inside a job that runs
+    * anyway — no separate `stat.bloomFilter` aggregation pass per batch.
+    * Properties that make an accumulator safe here: inserts are
+    * idempotent (task retries and speculative duplicates just re-set the
+    * same bits) and the driver only reads the value between jobs, after
+    * all task merges have landed. */
   final class PartitionedBloomAccumulator(ranges: Int, expectedTotal: Long,
       fpp: Double = 0.01)
       extends org.apache.spark.util.AccumulatorV2[Long, PartitionedBloom] {
@@ -145,7 +94,10 @@ object SeenSet {
       c
     }
     override def reset(): Unit = filters = null
-    /** See [[BloomAccumulator.copyAndReset]] — avoid the deep-copy. */
+    /** Task serialization calls copyAndReset on the DRIVER-side
+      * instance; the default copy()+reset() would deep-copy the
+      * accumulated filters (MBs) just to discard them — ship a fresh
+      * empty accumulator instead. */
     override def copyAndReset(): PartitionedBloomAccumulator =
       new PartitionedBloomAccumulator(ranges, expectedTotal, fpp)
     override def add(h: Long): Unit = {
@@ -192,10 +144,11 @@ object SeenSet {
     }
   }
 
-  /** The two-tier split against a partitioned filter: identical contract
-    * to [[filterNewWithBloom]] — "definitely new" skips the join,
-    * "possibly seen" is guarded by the exact anti-join, so correctness
-    * never depends on the filter. */
+  /** The two-tier split against a partitioned filter: "definitely new"
+    * skips the join, "possibly seen" is guarded by the exact anti-join, so
+    * correctness never depends on the filter. `candidates` is read twice
+    * — callers pass a materialized (persisted or checkpointed) frame and
+    * own its lifecycle; persisting here would leak. */
   def filterNewWithPartitionedBloom(candidates: DataFrame, seen: DataFrame,
       bloom: PartitionedBloom): DataFrame = {
     val spark = candidates.sparkSession

@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pins the physical-plan shapes the 100 TB posture claims — regressions
   * here are silent performance cliffs, not wrong answers, so they need
@@ -59,5 +61,38 @@ class PlanShapeSpec extends AnyFunSuite {
     val plan = planOf(gated)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
+  }
+
+  test("IVF centroid sample is a TakeOrderedAndProject, not a global sort") {
+    // a range source, not a local Seq: the optimizer would fold a filter
+    // over a LocalRelation away before planning
+    def corpus(s: SparkSession) = s.range(1024).select(
+      col("id").cast("int").as("id"),
+      array(col("id").cast("float"), lit(1f)).as("v"))
+    val nCells = 8
+    // ~16 of 1,024 ids pass the 1/64 hash prefilter — enough for nCells,
+    // so centroids runs only the prefiltered top-k, never its fallback
+    val kept = corpus(spark)
+      .filter(pmod(xxhash64(col("id")), lit(64)) === 0).count()
+    assert(kept >= nCells, s"prefilter kept $kept < $nCells rows")
+    // a child session owns its listener manager, so only the centroids
+    // query reaches the listener
+    val session = spark.newSession()
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]()
+    session.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    })
+    val cents = graft.ml.Ann.centroids(corpus(session), "id", "v", nCells)
+    assert(cents.length == nCells)
+    // the listener is called asynchronously from the listener bus
+    val plan = plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    assert(plan != null, "no executed plan reported within 60 s")
+    assert(plan.contains("pmod"), plan)
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Exchange rangepartitioning"),
+      s"global sort leaked into centroid sampling:\n$plan")
   }
 }
