@@ -258,9 +258,10 @@ object SparkEntry {
     }),
     "q25_dedup_clusters" -> ((s, dir) => {
       // keep-one-per-cluster assignment: exact-Jaccard pairs (the
-      // oracle-verifiable edge set) → connected components; the DuckDB
-      // mirror recomputes the same components with a recursive CTE
-      // deterministic half-corpus subset keeps the DuckDB mirror's
+      // oracle-verifiable edge set) → connected components (partition-
+      // local union-find over a halving boundary graph); the DuckDB
+      // mirror recomputes the same components with a recursive CTE.
+      // The deterministic half-corpus subset keeps the DuckDB mirror's
       // all-pairs edge recomputation inside the driver's gate budget;
       // the operator itself is subset-agnostic
       val docs = withPlantedDups(
@@ -273,15 +274,14 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "q27_dedup_clusters_star" -> ((s, dir) => {
-      // same cluster assignment through the GENERAL-GRAPH algorithm
-      // (large-star/small-star contraction) — components are
-      // algorithm-independent, so the same recursive-CTE DuckDB mirror
-      // verifies this path too
+      // the same cluster assignment as q25 through the same CC function
+      // (this key once ran large-star/small-star contraction); the key
+      // and the shared recursive-CTE DuckDB mirror stay
       val docs = withPlantedDups(
         ld(s, dir, "documents").filter(col("doc_id") % 2 === 0), s)
       val edges = Dedup.exactJaccardPairs(docs, "doc_id", "text",
         n = 3, threshold = 0.6)
-      Dedup.connectedComponentsStar(
+      Dedup.connectedComponents(
         docs.select(col("doc_id").as("id")), edges)
         .select(col("id").as("doc_id"), col("component"))
         .orderBy("doc_id")
@@ -558,8 +558,8 @@ object SparkEntry {
         |    * (CASE WHEN stopratio < 0.05 THEN 0.6 ELSE 1.0 END)) AS quality_score
         |FROM m""".stripMargin,
     "q25_dedup_clusters" -> dedupClustersOracleSql,
-    // the star variant computes the SAME components (algorithm-
-    // independent contract) — one independent mirror verifies both paths
+    // q27 runs the same CC function as q25 — one independent mirror
+    // verifies both keys
     "q27_dedup_clusters_star" -> dedupClustersOracleSql,
     "q26_repetition" ->
       """WITH t AS (SELECT doc_id,

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed near-duplicate detection: MinHash+LSH, SimHash, n-gram
@@ -298,190 +298,138 @@ object Dedup {
   // --------------------------------------- dedup cluster assignment
 
   /** Free the block-storage of a frame produced by `localCheckpoint` once
-    * a newer round supersedes it: O(log n)-round iterative algorithms
-    * otherwise pin every intermediate edge/label set in executor storage
-    * until the job ends (r4 ADVICE). No-op for non-checkpoint frames.
+    * its consumer has materialized: multi-level operators otherwise pin
+    * every intermediate edge/label set in executor storage until the job
+    * ends (r4 ADVICE). No-op for non-checkpoint frames.
     *
     * INVARIANT (r5 ADVICE): a frame must NEVER be read again after
     * `uncheckpoint` — `localCheckpoint` TRUNCATES lineage, so an
-    * unpersisted block is unrecoverable, not recomputable. Call sites
-    * here only ever release frames that are strictly superseded (an
-    * older CC round, or an intermediate whose consumer is itself already
-    * materialized). */
+    * unpersisted block is unrecoverable, not recomputable. The only call
+    * site, [[materializeAndRelease]], releases intermediates whose
+    * consumer is itself already materialized. */
   private def uncheckpoint(df: DataFrame): Unit =
     try df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false)
     } catch { case scala.util.control.NonFatal(_) => }
 
+  /** (x, minimum id of x's component) for every endpoint x of `edges`:
+    * union-find whose root is always its set's minimum id, with path
+    * splitting. Holds one map entry per distinct endpoint. */
+  private def minRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val g = parent(p)
+        parent(x) = g
+        x = p; p = g
+      }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(x => (x, find(x)))
+  }
+
+  /** Union-find inside each partition of an edge frame (u, v), no
+    * shuffle: (x, r) for every endpoint x, r being the minimum id of x's
+    * component in that partition. Lazy, with the partition count. */
+  private[graft] def localRoots(e: DataFrame): (DataFrame, Int) = {
+    import e.sparkSession.implicits._
+    val rows = e.select("u", "v").as[(Long, Long)].rdd
+    (rows.mapPartitions(minRoots).toDF("x", "r"), rows.getNumPartitions)
+  }
+
+  /** A level's boundary aggregation over [[localRoots]]: `root` = min r
+    * (the level's map) and `roots` = x's distinct r — at most one per
+    * partition, so it partial-aggregates and a hub's row stays bounded by
+    * the partition count. */
+  private[graft] def boundaryAggregate(roots: DataFrame): DataFrame =
+    roots.groupBy("x")
+      .agg(min(col("r")).as("root"), collect_set(col("r")).as("roots"))
+
   /** Connected components over near-duplicate pairs — the "keep one doc
-    * per duplicate cluster" primitive of a training-data pipeline. Plain
-    * iterative neighbor-min label propagation: each round every node takes
-    * the minimum label among itself and its neighbors, checkpointed per
-    * round with the converged-check riding the checkpoint as an observed
-    * metric (no extra job); the superseded round's checkpoint storage is
-    * released as soon as the new one materializes. Converges in
-    * graph-diameter rounds — tiny for near-dup clusters, which are dense
-    * by construction; for general web-graph-diameter inputs swap in
-    * large-star/small-star (same interface). Returns
-    * (id, component = min id in the component). */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 25): DataFrame = {
-    // the src semi-join preserves the old contract exactly: an edge
-    // endpoint absent from `nodes` contributes nothing and never appears
-    // in the output (the old per-round join-into-labels dropped such
-    // rows implicitly; the union form below would otherwise mint them)
-    val und = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(
-        edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-      .localCheckpoint(true)
-    // label sums are the convergence signal: neighbor-min labels only
-    // ever DECREASE, so the exact-decimal sum is strictly monotone and
-    // "sum unchanged" ⟺ "no label changed" — the check rides each
-    // round's own checkpoint job as an observed metric, replacing the
-    // old old-vs-new label join (one join per round removed; round 7
-    // guide §2.4). Decimal, not long: a 10^10-node id space overflows a
-    // 64-bit sum.
-    def labelSum(v: Option[Any]): java.math.BigDecimal = v match {
-      case Some(d: java.math.BigDecimal) => d
-      case _ => java.math.BigDecimal.ZERO // empty frame: sum is null
-    }
-    val obs0 = org.apache.spark.sql.Observation()
-    var labels = nodes.select(col("id"), col("id").as("component"))
-      .observe(obs0,
-        sum(col("component").cast("decimal(38,0)")).as("lsum"))
-      .localCheckpoint(true)
-    var prevSum = labelSum(obs0.get.get("lsum"))
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      // next label = min(own, min over neighbors) — computed as ONE
-      // aggregation over (own contribution ∪ neighbor contributions)
-      // instead of the old groupBy + two joins: same labels per round,
-      // one fewer shuffle and no left-join
-      val contributions = labels.unionByName(und
-        .join(labels.select(col("id").as("dst"),
-          col("component").as("ncomp")), Seq("dst"))
-        .select(col("src").as("id"), col("ncomp").as("component")))
-      val obs = org.apache.spark.sql.Observation()
-      val prev = labels
-      labels = contributions
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .observe(obs,
-          sum(col("component").cast("decimal(38,0)")).as("lsum"))
-        .localCheckpoint(true)
-      uncheckpoint(prev)
-      val s = labelSum(obs.get.get("lsum"))
-      changed = s.compareTo(prevSum) != 0
-      prevSum = s
-      iter += 1
-    }
-    uncheckpoint(und)
-    if (changed)
-      // fail LOUDLY (ADVICE r3: a println left silently-wrong labels on
-      // chain-shaped clusters): unconverged neighbor-min labels are not
-      // component ids, and the caller chose the wrong algorithm
-      throw new IllegalStateException(
-        s"connectedComponents: not converged in $maxIter rounds — graph " +
-          "diameter exceeds the near-dup regime; use " +
-          "connectedComponentsStar (large-star/small-star) or raise maxIter")
-    labels
-  }
-
-  /** Large-star pass over an undirected edge set (u, v): for every node,
-    * hang its strictly larger neighbors off m = min(N(u) ∪ {u}).
+    * per duplicate cluster" primitive of a training-data pipeline.
+    * Returns (id, component = min id in the component) for every node;
+    * edges with an endpoint that is not in `nodes` are ignored. EAGER —
+    * see [[materializeAndRelease]].
     *
-    * The neighborhood minimum is a partial-aggregating
-    * `groupBy(u).agg(min(v))` joined back — NOT a window: a window
-    * partitioned by u materializes each node's entire neighborhood in a
-    * single task, so a 10^8-degree web hub becomes one straggler task
-    * and nothing partial-aggregates. The groupBy form folds the hub
-    * map-side and AQE can skew-split the join back (r4 VERDICT #2). */
-  private[graft] def largeStarPass(e: DataFrame): DataFrame = {
-    val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = nbrs.groupBy("u").agg(min(col("v")).as("nmin"))
-    nbrs.join(mins, Seq("u"))
-      .withColumn("m", least(col("nmin"), col("u")))
-      .filter(col("v") > col("u") && col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .distinct()
-  }
-
-  /** Small-star pass: direct every edge large→small, m = min(N(u)) < u,
-    * re-hang u and its smaller neighbors off m. Same skew-safe
-    * groupBy-join shape as [[largeStarPass]]. */
-  private[graft] def smallStarPass(large: DataFrame): DataFrame = {
-    val directed = large.select(
-      greatest(col("u"), col("v")).as("u"),
-      least(col("u"), col("v")).as("v"))
-    val mins = directed.groupBy("u").agg(min(col("v")).as("m"))
-    directed.join(mins, Seq("u"))
-      .select(explode(array(
-        struct(col("u"), col("m").as("v")),
-        struct(col("v").as("u"), col("m").as("v")))).as("s"))
-      .select(col("s.u"), col("s.v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Connected components by alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the general-graph algorithm: O(log²) rounds in
-    * the worst case regardless of diameter, vs neighbor-min's
-    * diameter-many rounds. Same contract as [[connectedComponents]]:
-    * (id, component = min id in the component).
+    * Partition-local union-find over a halving boundary graph (the
+    * partition-local index + cross-partition boundary graph of Distributed
+    * Set Label-Constrained Reachability, ICDE 2022). Level k runs
+    * [[localRoots]] on its edge set, then [[boundaryAggregate]]; the
+    * boundary edges (r, root) for every other root r of an endpoint
+    * connect exactly the partition-local components that share a node,
+    * and their count rides the level's checkpoint job as an
+    * `Observation`. While any remain they are the next level's edges,
+    * coalesced to at most half the level's partition count. A level with
+    * one partition sees its whole edge set, so it leaves no boundary and
+    * needs no aggregation: over P input partitions there are at most
+    * ⌊log₂ P⌋ + 1 levels, whatever the graph's diameter. Labels resolve
+    * back through the level maps, one join per level, and the level
+    * checkpoints are released once the labels materialize.
     *
-    * Each round is two skew-safe shuffle-by-node passes over the EDGE set
-    * only (labels are implicit in the edge structure — nothing else
-    * materializes); the fixed point is a star forest whose centers are
-    * component minima. Convergence is EXACT and rides the round's own
-    * checkpoint job: the new edge set left-joins the previous one, and
-    * the observed (row count, rows-not-in-previous count) decide
-    * next == prev two-sidedly — novel = 0 gives next ⊆ prev, equal
-    * counts give equality — so no hash signature, no separate confirm
-    * action, zero extra jobs per round (r4 ask #7). Superseded
-    * checkpoints are unpersisted as soon as the next round materializes
-    * (r4 ADVICE). */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    val obs0 = org.apache.spark.sql.Observation()
+    * Per-task memory: a level-k union-find task holds one map entry per
+    * distinct endpoint of its partition, and a boundary aggregation row
+    * holds at most one root per partition. Each level after the first
+    * sees only the boundary graph of the one before, and once the count
+    * reaches one partition a single task holds all of it: a graph whose
+    * boundary stays large through the halvings degrades into that one
+    * task's memory, not into more rounds. */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame =
+    connectedComponentsLevels(nodes, edges)._1
+
+  /** [[connectedComponents]] plus the number of levels it ran. */
+  private[graft] def connectedComponentsLevels(nodes: DataFrame,
+      edges: DataFrame): (DataFrame, Int) = {
+    val ids = nodes.select(col("id"))
     var e = edges.select(col("id_a").as("u"), col("id_b").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .observe(obs0, count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    var prevCnt = obs0.get("cnt").asInstanceOf[Long]
-    var iter = 0
-    var converged = prevCnt == 0L
-    while (!converged && iter < maxIter) {
-      val obs = org.apache.spark.sql.Observation()
-      val prev = e
-      e = smallStarPass(largeStarPass(e))
-        .join(prev.select(col("u"), col("v"), lit(1).as("in_prev")),
-          Seq("u", "v"), "left")
-        .observe(obs, count(lit(1)).as("cnt"),
-          sum(when(col("in_prev").isNull, 1L).otherwise(0L)).as("novel"))
-        .select("u", "v")
-        .localCheckpoint(true)
-      val metrics = obs.get
-      val cnt = metrics("cnt").asInstanceOf[Long]
-      // sum over an empty frame is null — zero rows means zero novel
-      val novel = Option(metrics("novel")).fold(0L)(_.asInstanceOf[Long])
-      converged = novel == 0L && cnt == prevCnt
-      prevCnt = cnt
-      uncheckpoint(prev)
-      iter += 1
+      .join(ids.select(col("id").as("u")), Seq("u"), "left_semi")
+      .join(ids.select(col("id").as("v")), Seq("v"), "left_semi")
+    var maps = Vector.empty[DataFrame] // per level: (x, root)
+    var checkpoints = Vector.empty[DataFrame]
+    var more = true
+    while (more) {
+      val (roots, parts) = localRoots(e)
+      if (parts <= 1) {
+        // one partition saw every edge, so its union-find is complete: no
+        // aggregation, and it runs inside the labels' job
+        maps :+= roots.select(col("x"), col("r").as("root"))
+        more = false
+      } else {
+        val obs = Observation()
+        val level = boundaryAggregate(roots)
+          .observe(obs, sum(size(col("roots")) - 1).as("boundary"))
+          .localCheckpoint(true)
+        checkpoints :+= level
+        maps :+= level.select("x", "root")
+        // sum over an empty frame is null — no rows, no boundary
+        more = Option(obs.get("boundary")).exists(_.asInstanceOf[Long] > 0)
+        e = level.select(explode(col("roots")).as("u"), col("root").as("v"))
+          .filter(col("u") =!= col("v"))
+          .coalesce(math.max(1, parts / 2))
+      }
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar: no fixed point in $maxIter rounds")
-    // fixed point: e is a star forest (u → component-min center)
-    val centers = e.groupBy(col("u").as("id"))
-      .agg(min(col("v")).as("comp"))
-    nodes.select(col("id"))
-      .join(centers, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
+    val resolved = maps.init.foldRight(
+        maps.last.withColumnRenamed("root", "label")) { (map, next) =>
+      map.join(next.withColumnRenamed("x", "root"), Seq("root"), "left")
+        .select(col("x"), coalesce(col("label"), col("root")).as("label"))
+    }
+    val labels = ids
+      .join(resolved.withColumnRenamed("x", "id"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("label"), col("id")).as("component"))
+    (materializeAndRelease(labels, checkpoints: _*), maps.length)
   }
+
+  /** Alias of [[connectedComponents]], the former large-star/small-star
+    * entry point. */
+  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame): DataFrame =
+    connectedComponents(nodes, edges)
 
   // --------------------------------------- embedding-cosine near-dup
 

@@ -207,32 +207,31 @@ class MlSpec extends AnyFunSuite {
     // a 10^8-degree web hub in miniature: one node with 50k neighbors.
     // The r4 star-CC computed neighborhood minima with a window
     // partitioned by node — the whole neighborhood materialized in ONE
-    // task, no partial aggregation. The skew-safe form must (a) still
-    // label correctly, (b) plan the minima as partial HashAggregates
-    // with no WindowExec anywhere in either pass.
+    // task, no partial aggregation. Both CC entry points (the function
+    // and its star alias) must (a) still label correctly, and (b) the
+    // boundary aggregation — a node's row holds at most one root per
+    // partition — must plan as a partial aggregate, with no Window and no
+    // cartesian product.
     val n = 50000
     val nodes = (1L to (n + 1).toLong).toDF("id")
     val edges = (2L to (n + 1).toLong).map(i => (1L, i)).toDF("id_a", "id_b")
       .repartition(4)
-    val star = Dedup.connectedComponentsStar(nodes, edges)
-      .groupBy("component").count().collect()
-    assert(star.length == 1 && star.head.getLong(0) == 1L &&
-      star.head.getLong(1) == (n + 1).toLong)
-    val nm = Dedup.connectedComponents(nodes, edges)
-      .groupBy("component").count().collect()
-    assert(nm.length == 1 && nm.head.getLong(0) == 1L &&
-      nm.head.getLong(1) == (n + 1).toLong)
-    // plan shape of the passes themselves (pre-AQE plan carries the
-    // structure): partial min aggregation present, no window operator
+    Seq(Dedup.connectedComponents _, Dedup.connectedComponentsStar _)
+      .foreach { cc =>
+        val comps = cc(nodes, edges).groupBy("component").count().collect()
+        assert(comps.length == 1 && comps.head.getLong(0) == 1L &&
+          comps.head.getLong(1) == (n + 1).toLong)
+      }
+    // plan shape of the level itself (pre-AQE plan carries the structure)
     val e = edges.select(col("id_a").as("u"), col("id_b").as("v"))
-    val large = Dedup.largeStarPass(e)
-    Seq(large, Dedup.smallStarPass(large)).foreach { pass =>
-      val plan = pass.queryExecution.executedPlan.toString
-      assert(plan.contains("partial_min"),
-        s"neighborhood minimum is not a partial aggregate:\n$plan")
-      assert(!plan.contains("Window"),
-        s"skew-unsafe Window operator in the star pass:\n$plan")
-    }
+    val plan = Dedup.boundaryAggregate(Dedup.localRoots(e)._1)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("partial_collect_set") && plan.contains("partial_min"),
+      s"boundary aggregation is not a partial aggregate:\n$plan")
+    assert(!plan.contains("Window"),
+      s"skew-unsafe Window operator in the boundary aggregation:\n$plan")
+    assert(!plan.contains("CartesianProduct"),
+      s"cartesian product in the boundary aggregation:\n$plan")
   }
 
   test("neighbor-min CC ignores edge endpoints absent from nodes (r7)") {
@@ -307,38 +306,83 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
-  test("blocked CC rounds keep the exact maxIter accept/throw boundary") {
+  test("120-node path shuffled over 8 partitions: all 1, in 2 to 4 levels") {
     import spark.implicits._
-    // each round is one propagation step with its own checkpoint; the
-    // contract must stay: a path of n nodes has its last label change at
-    // round n-1, so it converges iff n <= maxIter — pin both sides of the
-    // edge
-    val n = 6
-    val nodes = (1L to n.toLong).toDF("id")
-    val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(nodes, edges, maxIter = n)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to n.toLong).forall(comp(_) == 1L))
-    assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(nodes, edges, maxIter = n - 1).collect()
-    }
-  }
-
-  test("high-diameter path: neighbor-min fails loudly, star converges") {
-    import spark.implicits._
-    // a 120-node path — diameter 119 exceeds neighbor-min's default 25
-    // rounds; silently-wrong labels were the r3 ADVICE bug, so the
-    // diameter-bound algorithm must now THROW, and the large-star/
-    // small-star one must label the whole path in O(log) rounds
+    // diameter 119: a round-per-hop algorithm needs 119 rounds. Partition-
+    // local union-find halves the partition count per level, so 8 input
+    // partitions bound the run at ⌊log₂ 8⌋ + 1 = 4 levels, and shuffled
+    // edges leave cross-partition boundary work for at least a second one
     val n = 120
     val nodes = (1L to n.toLong).toDF("id")
-    val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(nodes, edges, maxIter = 25).collect()
+    val path = new scala.util.Random(11)
+      .shuffle((1L until n.toLong).map(i => (i, i + 1)))
+    val edges = path.toDF("id_a", "id_b").repartition(8)
+    val (labels, levels) = Dedup.connectedComponentsLevels(nodes, edges)
+    val comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp.size == n && comp.values.forall(_ == 1L))
+    assert(levels > 1 && levels <= 4, s"$levels levels over 8 partitions")
+  }
+
+  test("one-partition edge set: union-find completes in exactly 1 level") {
+    import spark.implicits._
+    // the level bound's base case: one partition sees every edge, so it
+    // leaves no boundary graph and no second level
+    val n = 120
+    val nodes = (1L to n.toLong).toDF("id")
+    val edges = new scala.util.Random(11)
+      .shuffle((1L until n.toLong).map(i => (i, i + 1)))
+      .toDF("id_a", "id_b").repartition(1)
+    val (labels, levels) = Dedup.connectedComponentsLevels(nodes, edges)
+    assert(labels.collect().forall(_.getLong(1) == 1L))
+    assert(levels == 1, s"$levels levels over 1 partition")
+  }
+
+  test("CC equals a driver-side union-find on random graphs (1-16 partitions)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // boundary frames keep all 4 shuffle partitions here (no AQE
+    // coalescing), so inputs over 4+ partitions can take 3-4 levels and
+    // the resolution through several level maps is exercised
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    import session.implicits._
+    // ids 40..44 are never nodes, and each of 0..39 is a node with
+    // probability 0.8: phantom endpoints and isolated nodes both occur
+    val graphs = for {
+      isNode <- Gen.listOfN(40, Gen.prob(0.8))
+      base <- Gen.listOf(Gen.zip(Gen.choose(0L, 44L), Gen.choose(0L, 44L)))
+      again <- Gen.someOf(base)
+      loops <- Gen.listOf(Gen.choose(0L, 44L))
+      parts <- Gen.choose(1, 16)
+    } yield {
+      val nodes = isNode.zipWithIndex.collect { case (true, i) => i.toLong }
+      // duplicate and reversed copies, self-loops
+      val edges = base ++ again ++ again.map(_.swap) ++ loops.map(x => (x, x))
+      (nodes, new scala.util.Random(parts).shuffle(edges), parts)
     }
-    val comp = Dedup.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to n.toLong).forall(comp(_) == 1L))
+    def reference(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
+      def find(x: Long): Long =
+        if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+      for ((a, b) <- edges if parent.contains(a) && parent.contains(b)) {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      nodes.map(x => x -> find(x)).toMap
+    }
+    var deepest = 0
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(20).withMaxSize(60),
+      Prop.forAllNoShrink(graphs) { case (nodes, edges, parts) =>
+        val (labels, levels) = Dedup.connectedComponentsLevels(
+          nodes.toDF("id"), edges.toDF("id_a", "id_b").repartition(parts))
+        deepest = math.max(deepest, levels)
+        val rows = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+        val bound = 32 - Integer.numberOfLeadingZeros(parts) // ⌊log₂ p⌋ + 1
+        rows.length == nodes.length && rows.toMap == reference(nodes, edges) &&
+          levels <= bound
+      })
+    assert(result.passed, result.status.toString)
+    assert(deepest >= 3, s"no generated graph took more than $deepest levels")
   }
 
   test("dropped degenerate buckets surface as observed metrics") {
