@@ -107,16 +107,18 @@ final case class CrawlConfig(
       * defaulturlhandler.py:145-207). */
     fetchSocial: Boolean = true,
     /** compact the pending-frontier delta parts every K batches; between
-      * compactions the per-batch state write is O(batch), not O(frontier). */
+      * compactions the per-batch state write is O(batch), not O(frontier).
+      * With a store and `durableDeltas`, K is also the base cadence. */
     compactEvery: Int = 4,
-    /** durable-commit granularity. false = full frontier/seen/crawl_log
-      * snapshot per batch (simple time travel; O(state) write per batch).
-      * true = the 10^10-frontier shape: each batch durably commits ONLY
-      * its delta parts (pending rows, done rows, dequeued-key and
-      * redirect tombstones, seen increment, log rows — O(batch) bytes),
-      * and the full tables are written only every `compactEvery` batches
-      * as a base snapshot; resume() reconstructs base + deltas with the
-      * same tombstone semantics the in-memory views use. */
+    /** base cadence of the durable store, which has one layout: base
+      * snapshots (full frontier/seen/crawl_log), delta snapshots (pending
+      * rows, done rows, dequeued-key and redirect tombstones, seen
+      * increment, log rows — O(batch) bytes) and a batch_commit marker.
+      * A non-empty batch writes either a base or its deltas, never both.
+      * false = a base every batch (simple time travel; O(state) write per
+      * batch). true = the 10^10-frontier shape: a base every
+      * `compactEvery` batches, deltas in between. resume() reads any
+      * store under either setting. */
     durableDeltas: Boolean = false,
     /** the global contiguous crawl-sequence column is the crawl-order
       * parity artifact (range-partitioned sort + zipWithIndex). At
@@ -132,7 +134,9 @@ final case class CrawlResult(
     images: DataFrame,
     metrics: DataFrame,
     /** per-batch driver counters (batch, counter, value): "dequeued",
-      * "robots_fetched", "links_seen_delta", "bloom_inserted_total" —
+      * "robots_fetched", "links_seen_delta", "bloom_inserted_total",
+      * "bloom_enabled" (1 when the batch's seen filter used the Bloom
+      * tier, 0 with useBloom off or after the auto-disable) —
       * the loop's observed metrics surfaced as data instead of stdout
       * (r4 ask #8). Scalars only; O(batches) rows, built driver-side
       * from values the loop already materialized. */
@@ -207,8 +211,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
   /** Exact resume (north rule): continue a durable crawl from the
     * store's last COMPLETE batch — anchored on the batch-commit marker
     * written after all of a batch's tables, so a crash mid-commit is
-    * replayed, never half-loaded. The frontier (pending + done rows with
-    * their tries/not_before), the seen set, and the crawl log load back;
+    * replayed, never half-loaded. State is the latest base at or before
+    * the marker plus every delta after it; the layout does not depend on
+    * `durableDeltas`, so any store resumes under either setting (the
+    * setting only picks the base cadence from here on). The frontier
+    * (pending + done rows with their tries/not_before), the seen set, and
+    * the crawl log load back;
     * the Bloom accelerator repopulates from the seen table inside the
     * one checkpoint job that loads it; batch numbering (and therefore
     * batch time, dequeue order and crawl_seq) continues from the marker.
@@ -259,6 +267,26 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     def frontierView: DataFrame =
       if (doneParts.isEmpty) pendingView
       else unionAll(doneParts.toSeq).unionByName(pendingView)
+    // a frontier base snapshot replaces every frontier part: its rows
+    // already have the tombstones applied
+    def setFrontierBase(fr: DataFrame): Unit = {
+      pendingParts.clear()
+      doneParts.clear()
+      dequeuedKeyParts.clear()
+      redirectTombstoneParts.clear()
+      pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
+      doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
+    }
+
+    // the store's delta tables, each holding one batch's slice of a parts
+    // array: the parts past that array's commit mark
+    val deltaTables = Seq(
+      "frontier_pending_delta" -> pendingParts,
+      "frontier_done_delta" -> doneParts,
+      "frontier_dequeued_keys" -> dequeuedKeyParts,
+      "frontier_redirect_tombstones" -> redirectTombstoneParts,
+      "seen_delta" -> seenParts,
+      "crawl_log_delta" -> logParts)
 
     // ---- seen-set Bloom accelerator ------------------------------------
     // Populated by a pass-through tap on url_hash inside the seen-delta
@@ -268,7 +296,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     // where their range's anti-join probes run, so capacity scales with
     // the range count. The auto-disable below remains the honesty
     // backstop for a run that overruns its configured total capacity —
-    // the loop falls back to the always-authoritative exact anti-join.
+    // the loop falls back to the always-authoritative exact anti-join,
+    // and the batch's "bloom_enabled" counter reads 0.
     val bloomAcc = new SeenSet.PartitionedBloomAccumulator(
       math.max(1, config.bloomRanges), config.bloomExpected)
     if (config.useBloom)
@@ -281,11 +310,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       else df
     def noteInserted(n: Long): Unit = {
       bloomInserted += n
-      if (bloomEnabled && bloomInserted > config.bloomExpected) {
-        bloomEnabled = false
-        println(s"[crawl] bloom auto-disabled: $bloomInserted inserts " +
-          s"exceed capacity ${config.bloomExpected}; exact anti-join only")
-      }
+      if (bloomInserted > config.bloomExpected) bloomEnabled = false
     }
 
     val startBatch = seedsOpt match {
@@ -312,29 +337,16 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           seenParts += seenLoaded
           noteInserted(obs.get("n").asInstanceOf[Long])
         }
-        // both modes anchor on the batch-commit MARKER — the one tiny
-        // table written LAST in each batch's durable commit. A crash
-        // anywhere mid-commit leaves no marker for that batch, so resume
-        // anchors on the previous complete batch and deterministically
-        // replays the torn one (overwriting its partial snapshots);
-        // without this, a multi-table commit has no atomicity and a torn
-        // batch would resume into a state no uninterrupted run produces.
+        // anchor on the batch-commit MARKER — the one tiny table written
+        // LAST in each batch's durable commit. A crash anywhere mid-commit
+        // leaves no marker for that batch, so resume anchors on the
+        // previous complete batch and deterministically replays the torn
+        // one (overwriting its partial snapshots); without this, a
+        // multi-table commit has no atomicity and a torn batch would
+        // resume into a state no uninterrupted run produces.
         val marker = st.latestSnapshot("batch_commit").getOrElse(
           throw new IllegalStateException(
             "no committed batch marker to resume"))
-        // refuse a mode mismatch up front: a full-mode resume of a
-        // delta-mode store (or vice versa) would otherwise load a stale
-        // base and silently drop the deltas (r4 ADVICE #3 made loud)
-        val markerMode = st.manifest("batch_commit", marker)
-          .flatMap("\"mode\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(_)
-            .map(_.group(1)))
-          .getOrElse("full")
-        val wantMode = if (config.durableDeltas) "delta" else "full"
-        if (markerMode != wantMode)
-          throw new IllegalStateException(
-            s"store was committed in '$markerMode' mode but resume() is " +
-              s"configured durableDeltas=${config.durableDeltas} — " +
-              s"set durableDeltas=${markerMode == "delta"}")
         // every snapshot loaded below is lineage-verified against disk
         // first (part names + byte sizes from its manifest) so a torn or
         // tampered snapshot refuses to resume instead of silently
@@ -349,57 +361,37 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             throw new IllegalStateException(
               s"snapshot $table/$sn vanished between verify and read"))
         }
-        if (!config.durableDeltas) {
-          // empty batches commit ONLY their marker (no state changed),
-          // so the anchor tables live at the latest snapshot <= marker
-          def tableAt(table: String): Option[DataFrame] =
-            st.snapshots(table).filter(_ <= marker).lastOption
-              .map(readVerified(table, _))
-          val fr = tableAt("frontier").getOrElse(
-            throw new IllegalStateException(
-              s"no frontier snapshot at or before batch marker $marker"))
-          pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-          doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-          loadSeen(Seq(tableAt("seen").getOrElse(
-            throw new IllegalStateException(
-              s"no seen snapshot at or before batch marker $marker"))))
-          tableAt("crawl_log").foreach(logParts += _)
-          marker.toInt + 1
-        } else {
-          // delta mode: latest full base at-or-before the marker (if any
-          // compaction ran) + every marker-covered delta snapshot after
-          // it, loaded into the SAME parts arrays the in-memory views
-          // are built from — tombstone semantics are therefore identical
-          // to an uninterrupted run
-          def committed(sn: Long) = sn <= marker
-          val baseSnap = st.snapshots("frontier").filter(committed).lastOption
-          def after(sn: Long) = baseSnap.forall(_ < sn) && committed(sn)
-          def loadDeltas(table: String,
-              into: mutable.ArrayBuffer[DataFrame]): Unit =
-            st.snapshots(table).filter(after)
-              .foreach(sn => into += readVerified(table, sn))
-          baseSnap.foreach { b =>
-            val fr = readVerified("frontier", b)
-            pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-            doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-            if (st.snapshots("crawl_log").contains(b))
-              logParts += readVerified("crawl_log", b)
-          }
-          loadDeltas("frontier_pending_delta", pendingParts)
-          loadDeltas("frontier_done_delta", doneParts)
-          loadDeltas("frontier_dequeued_keys", dequeuedKeyParts)
-          loadDeltas("frontier_redirect_tombstones", redirectTombstoneParts)
-          loadDeltas("crawl_log_delta", logParts)
-          val seenFrames =
-            baseSnap.map(readVerified("seen", _)).toSeq ++
-              st.snapshots("seen_delta").filter(after)
-                .map(readVerified("seen_delta", _))
-          if (seenFrames.isEmpty)
-            throw new IllegalStateException(
-              "no committed delta snapshots to resume")
-          loadSeen(seenFrames)
-          (marker + 1).toInt
+        // the latest base at or before the marker (empty batches write
+        // none, so it may be older) + every marker-covered delta after
+        // it, loaded into the SAME parts arrays the in-memory views are
+        // built from — tombstone semantics are therefore identical to an
+        // uninterrupted run. Deltas at or before the base are already in
+        // it; deltas past the marker belong to a torn batch. A base is a
+        // batch with all three base tables: a crash inside a base commit
+        // can leave its frontier alone, and a replay of that batch under
+        // the delta cadence does not overwrite it.
+        def committed(sn: Long) = sn <= marker
+        val withBase = Seq("seen", "crawl_log").map(st.snapshots(_).toSet)
+        val baseSnap = st.snapshots("frontier")
+          .filter(sn => committed(sn) && withBase.forall(_(sn))).lastOption
+        def after(sn: Long) = baseSnap.forall(_ < sn) && committed(sn)
+        def deltas(table: String): Seq[DataFrame] =
+          st.snapshots(table).filter(after).map(readVerified(table, _))
+        baseSnap.foreach { b =>
+          setFrontierBase(readVerified("frontier", b))
+          logParts += readVerified("crawl_log", b)
         }
+        // seen deltas load with the base below, through the Bloom tap
+        deltaTables.foreach { case (table, parts) =>
+          if (parts ne seenParts) parts ++= deltas(table)
+        }
+        val seenFrames =
+          baseSnap.map(readVerified("seen", _)).toSeq ++ deltas("seen_delta")
+        if (seenFrames.isEmpty)
+          throw new IllegalStateException(
+            "no committed base or delta snapshots to resume")
+        loadSeen(seenFrames)
+        (marker + 1).toInt
     }
 
     // ---- domain-rules cache (reference DomainCache LRU, fully distributed)
@@ -418,18 +410,19 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     // loop already holds; never a distributed collection
     val counterRows = mutable.ArrayBuffer[(Int, String, Long)]()
 
-    // delta-durability bookkeeping: index of the first part in each array
-    // NOT yet durably committed (parts loaded by resume are durable)
-    var pendMark = pendingParts.length
-    var doneMark = doneParts.length
-    var dkMark = dequeuedKeyParts.length
-    var rtMark = redirectTombstoneParts.length
-    var seenMark = seenParts.length
-    var logMark = logParts.length
-    // in delta mode the seed wave is batch 0's delta, not pre-durable
-    if (config.durableDeltas && seedsOpt.nonEmpty) {
-      pendMark = 0; seenMark = 0
-    }
+    // commit marks: per delta table, the index of the first part of its
+    // array NOT yet durably committed. Parts loaded by resume are durable;
+    // a fresh run's seed wave is not — it is batch 0's delta or part of
+    // batch 0's base.
+    val marks = Array.fill(deltaTables.length)(0)
+    def markCommitted(): Unit =
+      deltaTables.indices.foreach(i => marks(i) = deltaTables(i)._2.length)
+    if (seedsOpt.isEmpty) markCommitted()
+    // the one reader of durableDeltas: how often a batch writes a base
+    val baseEvery = if (config.durableDeltas) config.compactEvery else 1
+    val fetchParts =
+      if (config.fetchPartitions > 0) config.fetchPartitions
+      else spark.sessionState.conf.numShufflePartitions
 
     for (batch <- startBatch until startBatch + config.maxBatches) {
       val bt = batchTime(batch)
@@ -463,15 +456,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         var sitemapUrls: Option[DataFrame] = None
         var newRulesOpt: Option[DataFrame] = None
         if (config.respectRobots || config.expandSitemaps) {
-          val parts =
-            if (config.fetchPartitions > 0) config.fetchPartitions
-            else spark.sessionState.conf.numShufflePartitions
           val batchHostsDf = dequeued.select("host").distinct()
           val missing =
             if (rulesParts.isEmpty) batchHostsDf
             else batchHostsDf.join(rulesView.select("host"),
               Seq("host"), "left_anti")
-          val (newRules, newCount) = fetchRobots(missing, batch, parts)
+          val (newRules, newCount) = fetchRobots(missing, batch, fetchParts)
           counterRows += ((batch, "robots_fetched", newCount))
           if (newCount > 0) {
             rulesParts += newRules
@@ -509,15 +499,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val toFetch = gated.filter(col("allowed"))
 
         // ---- host-partitioned, deterministically ordered fetch+parse ----
-        val parts =
-          if (config.fetchPartitions > 0) config.fetchPartitions
-          else spark.sessionState.conf.numShufflePartitions
         val internetL = internet
         val cfg = config
         val fetched: Dataset[FetchedPage] =
           toFetch
             .select("url", "url_hash", "host", "host_hash_salted", "seq")
-            .repartition(parts, col("host_hash_salted"))
+            .repartition(fetchParts, col("host_hash_salted"))
             .sortWithinPartitions("host", "seq")
             .as[(String, Long, String, Long, Long)]
             .mapPartitions { it =>
@@ -565,6 +552,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             SeenSet.filterNewWithPartitionedBloom(admitted, seen,
               bloomAcc.value)
           else SeenSet.filterNewExact(admitted, seen)
+        counterRows += ((batch, "bloom_enabled", if (bloomEnabled) 1L else 0L))
 
         // redirect targets enter the seen set under their canonical form —
         // the reference processed the final URL's response, so the engine
@@ -667,83 +655,37 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       // durable commits sit OUTSIDE the n > 0 block: an EMPTY batch still
       // commits its (cheap) batch_commit marker, so the resume anchor
       // advances across drained batches instead of replaying them on
-      // every resume (r4 ADVICE #2); table commits stay conditional —
-      // nothing changed, so resume reads the latest snapshot <= marker
+      // every resume (r4 ADVICE #2). It writes no base — nothing changed
+      // — and no delta beyond a not yet durable seed wave.
       store match {
-        case Some(s) if config.durableDeltas =>
-          // 10^10-frontier durable shape: this batch's delta parts —
-          // and ONLY them — are committed (O(batch) bytes per batch);
-          // the full tables are written as a base snapshot every
-          // compactEvery batches, which also compacts memory
-          val lineage = Map("batch" -> batch.toString,
-            "dequeued" -> n.toString, "mode" -> "delta")
-          def commitSlice(table: String, parts: Seq[DataFrame]): Unit =
-            if (parts.nonEmpty)
-              s.commit(table, batch, unionAll(parts), lineage)
-          commitSlice("frontier_pending_delta",
-            pendingParts.drop(pendMark).toSeq)
-          commitSlice("frontier_done_delta",
-            doneParts.drop(doneMark).toSeq)
-          commitSlice("frontier_dequeued_keys",
-            dequeuedKeyParts.drop(dkMark).toSeq)
-          commitSlice("frontier_redirect_tombstones",
-            redirectTombstoneParts.drop(rtMark).toSeq)
-          commitSlice("seen_delta", seenParts.drop(seenMark).toSeq)
-          commitSlice("crawl_log_delta", logParts.drop(logMark).toSeq)
-          if ((batch + 1) % config.compactEvery == 0) {
+        case Some(s) =>
+          val lineage = Map("batch" -> batch.toString, "dequeued" -> n.toString)
+          if (n > 0 && (batch + 1) % baseEvery == 0) {
+            // base batch: the full tables and no delta slices (resume
+            // skips deltas at or before a base); reading the base back
+            // also compacts the in-memory parts
             s.commit("frontier", batch, frontierView, lineage)
             s.commit("seen", batch, seenView, lineage)
-            s.commit("crawl_log", batch, unionAll(logParts.toSeq),
-              lineage)
-            val fr = s.read(spark, "frontier", Some(batch)).get
-            pendingParts.clear()
-            pendingParts += fr.filter(
-              col("state") === FrontierRow.StatePending)
-            doneParts.clear()
-            doneParts += fr.filter(
-              col("state") =!= FrontierRow.StatePending)
-            dequeuedKeyParts.clear()
-            redirectTombstoneParts.clear()
+            s.commit("crawl_log", batch, unionAll(logParts.toSeq), lineage)
+            setFrontierBase(s.read(spark, "frontier", Some(batch)).get)
             seenParts.clear()
             seenParts += s.read(spark, "seen", Some(batch)).get
+          } else {
+            // the 10^10-frontier shape: only this batch's parts — O(batch)
+            // bytes, not O(state)
+            deltaTables.zip(marks).foreach { case ((table, parts), mark) =>
+              if (parts.length > mark)
+                s.commit(table, batch, unionAll(parts.drop(mark).toSeq),
+                  lineage)
+            }
           }
           // the marker is written LAST: a batch is durable iff its
           // marker exists (resume anchors on it — see runInternal)
           s.commit("batch_commit", batch,
             Seq((batch, n)).toDF("batch", "dequeued"), lineage)
-          pendMark = pendingParts.length
-          doneMark = doneParts.length
-          dkMark = dequeuedKeyParts.length
-          rtMark = redirectTombstoneParts.length
-          seenMark = seenParts.length
-          logMark = logParts.length
-        case Some(s) =>
-          // durable mode: full snapshot per batch (time travel + exact
-          // resume); reading back also compacts the in-memory deltas
-          val lineage = Map("batch" -> batch.toString,
-            "dequeued" -> n.toString, "mode" -> "full")
-          if (n > 0) {
-            s.commit("frontier", batch, frontierView, lineage)
-            s.commit("seen", batch, seenView, lineage)
-            s.commit("crawl_log", batch, unionAll(logParts.toSeq), lineage)
-          }
-          // marker LAST — the batch is durable only once all three
-          // tables landed (resume anchors on it)
-          s.commit("batch_commit", batch,
-            Seq((batch, n)).toDF("batch", "dequeued"), lineage)
-          if (n > 0) {
-            val fr = s.read(spark, "frontier", Some(batch)).get
-            pendingParts.clear()
-            pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-            doneParts.clear()
-            doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-            dequeuedKeyParts.clear()
-            redirectTombstoneParts.clear()
-            seenParts.clear()
-            seenParts += s.read(spark, "seen", Some(batch)).get
-          }
+          markCommitted()
         case None =>
-          // delta mode: compact the pending + seen views every K batches
+          // no store: compact the pending + seen views every K batches
           // — one O(|state|) rewrite amortized over K O(batch) appends;
           // bakes the lazy transitions and tombstones into one part each
           if (n > 0 && (batch + 1) % config.compactEvery == 0) {

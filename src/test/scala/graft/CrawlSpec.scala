@@ -26,6 +26,11 @@ class CrawlSpec extends AnyFunSuite {
       store: Option[SnapshotStore] = None) =
     new CrawlLoop(spark, internet, cfg, store)
 
+  /** the per-batch "bloom_enabled" counter, in batch order */
+  def bloomEnabled(r: graft.crawl.CrawlResult): Seq[Long] = r.counters
+    .filter(org.apache.spark.sql.functions.col("counter") === "bloom_enabled")
+    .orderBy("batch").collect().map(_.getAs[Long]("value")).toSeq
+
   test("crawl discovers pages across sites and batches") {
     spark.sparkContext.setLogLevel("WARN")
     val result = newLoop().run(Seq("https://site-0.test/"))
@@ -158,6 +163,8 @@ class CrawlSpec extends AnyFunSuite {
     val resumed = newLoop(cfg, Some(store)).resume()
     assert(store.snapshots("frontier") == Seq(2L),
       "base snapshot must appear exactly at the compaction boundary")
+    assert(!store.snapshots("crawl_log_delta").contains(2L),
+      "a base batch writes no delta slices")
     assert(store.snapshots("crawl_log_delta").contains(3L))
     val fresh = newLoop(CrawlConfig(maxBatches = 4))
       .run(Seq("https://site-0.test/"))
@@ -167,6 +174,83 @@ class CrawlSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(logRows(resumed) == logRows(fresh),
       "delta-resumed crawl log diverges from the uninterrupted run")
+    assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
+      .toSeq ==
+      fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
+  }
+
+  test("a store resumes under either cadence: interrupted + resumed == uninterrupted") {
+    // one store layout whatever durableDeltas says (it only sets how often
+    // a base is written), so 2 batches under one setting resume 2 more
+    // under the other and must equal a 4-batch run that never stopped
+    import org.apache.spark.sql.functions.col
+    val seeds = Seq("https://site-0.test/")
+    val delta = CrawlConfig(maxBatches = 2, durableDeltas = true,
+      compactEvery = 3)
+    val full = CrawlConfig(maxBatches = 2)
+    val fresh = newLoop(CrawlConfig(maxBatches = 4)).run(seeds)
+    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
+      .select("batch", "seq", "url", "final_url", "status", "host",
+        "content_type")
+      .collect().map(_.toString).sorted.toSeq
+    def seenUrls(r: graft.crawl.CrawlResult) =
+      r.seen.select("url").collect().map(_.getString(0)).sorted.toSeq
+    def pending(r: graft.crawl.CrawlResult) =
+      r.frontier.filter(col("state") === "pending").count()
+    val deltaTables = Seq("frontier_pending_delta", "frontier_done_delta",
+      "frontier_dequeued_keys", "frontier_redirect_tombstones", "seen_delta",
+      "crawl_log_delta")
+    for ((first, second) <- Seq(delta -> full, full -> delta)) {
+      val how = s"durableDeltas ${first.durableDeltas} -> " +
+        s"${second.durableDeltas}"
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-cross-resume").toString
+      val store = new SnapshotStore(dir)
+      newLoop(first, Some(store)).run(seeds)
+      val resumed = newLoop(second, Some(store)).resume()
+      assert(logRows(resumed) == logRows(fresh), how)
+      assert(seenUrls(resumed) == seenUrls(fresh), how)
+      assert(pending(resumed) == pending(fresh), how)
+      if (second == full) {
+        // each resumed batch wrote a base and no delta slice
+        assert(store.snapshots("frontier") == Seq(2L, 3L), how)
+        assert(store.snapshots("crawl_log_delta") == Seq(0L, 1L), how)
+        deltaTables.foreach { t =>
+          assert(store.snapshots(t).forall(_ < 2L), s"$how: $t")
+        }
+      } else {
+        // bases 0 and 1 from the full run, 2 at the compaction boundary,
+        // then batch 3 as a delta
+        assert(store.snapshots("frontier") == Seq(0L, 1L, 2L), how)
+        assert(store.snapshots("crawl_log_delta") == Seq(3L), how)
+      }
+    }
+  }
+
+  test("a torn base batch replayed as a delta batch resumes exactly") {
+    // batch 2 of a base-every-batch run dies after its frontier base
+    // landed (the frontier commits first, the marker last). Resuming under
+    // the delta cadence replays batch 2 as deltas and leaves that frontier
+    // snapshot at the new marker; the next resume must not take it as
+    // batch 2's base, since seen and crawl_log never landed there.
+    val seeds = Seq("https://site-0.test/")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-torn-base").toString
+    val store = new SnapshotStore(dir)
+    newLoop(CrawlConfig(maxBatches = 2), Some(store)).run(seeds)
+    store.commit("frontier", 2L, store.read(spark, "frontier", Some(1L)).get)
+    val delta = CrawlConfig(maxBatches = 1, durableDeltas = true,
+      compactEvery = 4)
+    newLoop(delta, Some(store)).resume()
+    assert(store.latestSnapshot("batch_commit").contains(2L))
+    assert(store.snapshots("crawl_log_delta") == Seq(2L))
+    val resumed = newLoop(delta, Some(store)).resume()
+    val fresh = newLoop(CrawlConfig(maxBatches = 4)).run(seeds)
+    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
+      .select("batch", "seq", "url", "final_url", "status", "host",
+        "content_type")
+      .collect().map(_.toString).sorted.toSeq
+    assert(logRows(resumed) == logRows(fresh))
     assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
       .toSeq ==
       fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
@@ -250,6 +334,10 @@ class CrawlSpec extends AnyFunSuite {
       exact.seen.collect().map(_.getAs[String]("url")).sorted.toSeq)
     val urls = tiny.crawlLog.collect().map(_.getAs[String]("url"))
     assert(urls.distinct.length == urls.length, "duplicate fetches")
+    // batch 0's filter ran with the Bloom tier; its seen delta overran
+    // the capacity, so batch 1 ran exact-only
+    assert(bloomEnabled(tiny) == Seq(1L, 0L))
+    assert(bloomEnabled(exact) == Seq(0L, 0L))
   }
 
   test("partitioned bloom (8 url_hash ranges) stays exact vs no bloom") {
@@ -397,6 +485,8 @@ class CrawlSpec extends AnyFunSuite {
     val a = exact.seen.collect().map(_.getAs[String]("url")).sorted
     val b = bloom.seen.collect().map(_.getAs[String]("url")).sorted
     assert(a.toSeq == b.toSeq)
+    assert(bloomEnabled(bloom) == Seq(1L, 1L, 1L),
+      "the default capacity must keep the filter on")
   }
 
   test("host-range shards union to the unsharded run") {
@@ -461,12 +551,6 @@ class CrawlSpec extends AnyFunSuite {
     // further empty batch commits marker 8
     new CrawlLoop(spark, tiny, cfg(1), Some(store)).resume()
     assert(store.latestSnapshot("batch_commit").contains(8L))
-    // mode mismatch fails loudly instead of loading a stale base
-    val e = intercept[IllegalStateException] {
-      new CrawlLoop(spark, tiny,
-        CrawlConfig(maxBatches = 1), Some(store)).resume()
-    }
-    assert(e.getMessage.contains("durableDeltas"), e.getMessage)
     // full mode: drained run also advances its marker, and resume reads
     // the state tables from the latest snapshot at-or-before it
     val dirF = java.nio.file.Files

@@ -194,6 +194,7 @@ class MlSpec extends AnyFunSuite {
     val nodes = (1L to 10L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
       (5L, 7L), (8L, 9L)).toDF("id_a", "id_b")
+    // connectedComponentsStar is kept as an alias of connectedComponents
     val comp = Dedup.connectedComponentsStar(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 4L).forall(comp(_) == 1L))
@@ -202,7 +203,7 @@ class MlSpec extends AnyFunSuite {
     assert(comp(10L) == 10L)
   }
 
-  test("hub graph (50k-degree node): both CC algorithms, skew-safe plan") {
+  test("hub graph (50k-degree node): both CC entry points, skew-safe plan") {
     import spark.implicits._
     // a 10^8-degree web hub in miniature: one node with 50k neighbors.
     // The r4 star-CC computed neighborhood minima with a window
@@ -234,13 +235,12 @@ class MlSpec extends AnyFunSuite {
       s"cartesian product in the boundary aggregation:\n$plan")
   }
 
-  test("neighbor-min CC ignores edge endpoints absent from nodes (r7)") {
+  test("CC ignores edge endpoints absent from nodes (r7)") {
     import spark.implicits._
-    // r7 rewrote the neighbor-min round as union + one aggregation; the
-    // old per-round join-into-labels implicitly dropped edge endpoints
-    // that are not nodes, and the new explicit semi-join guard must
-    // preserve that contract: no minted output rows, no label pulled
-    // from a phantom endpoint's id
+    // edges are semi-joined to the nodes on both endpoints before the
+    // first union-find level, so an endpoint that is not a node mints no
+    // output row and lends no label: a phantom id smaller than every
+    // node must not become a component's root
     val nodes = Seq(5L, 6L, 7L).toDF("id")
     // 99 is not a node; 1 is not a node but would win every min
     val edges = Seq((5L, 6L), (6L, 99L), (1L, 7L)).toDF("id_a", "id_b")
