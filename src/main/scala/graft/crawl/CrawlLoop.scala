@@ -52,11 +52,11 @@ final case class FetchedPage(
 final case class CrawlConfig(
     maxBatches: Int = 5,
     perHostBudget: Int = 100,
+    /** per-host minimum gap between fetches, in seconds (J-3; reference
+      * delay_s, request.py:31). Above 0, every URL of a host is fetched
+      * in one partition, in sequence, so the gap holds across the batch;
+      * at 0 a hot host's URLs spread over `saltBuckets` partitions. */
     delayS: Int = 0,
-    respectRobots: Boolean = true,
-    bytesLimit: Long = 5000000L,
-    maxTries: Int = 3,
-    saltBuckets: Int = 4,
     fetchPartitions: Int = 0, // 0 → spark.sql.shuffle.partitions
     useBloom: Boolean = true,
     /** Bloom capacity — size to the run's URL budget; oversizing inflates
@@ -68,10 +68,6 @@ final case class CrawlConfig(
       * co-bucketed with the seen table's url_hash ranges, and capacity
       * scales with the range count instead of auto-disabling. */
     bloomRanges: Int = 1,
-    startTime: Instant = Instant.parse("2024-01-01T00:00:00Z"),
-    /** robots-gate UA — the reference checks the request's agent, not "*"
-      * (baseurl.py:221-223). */
-    userAgent: String = "Mozilla/5.0 (X11; Linux x86_64) graft/1.0",
     /** host-hash-range sharding: this loop instance dequeues (and
       * therefore fetches, robots-gates and rules-caches) ONLY hosts with
       * `pmod(host_hash, shardCount) == shardIndex`. This is how a
@@ -86,8 +82,6 @@ final case class CrawlConfig(
       * (CrawlSpec proves it). */
     shardCount: Int = 1,
     shardIndex: Int = 0,
-    /** per-request total deadline (S3; crawlerinterface.py:253-259). */
-    timeoutS: Int = 20,
     /** domain-rules LRU capacity (reference LRU(400), domaincache.py:176).
       * Eviction runs AFTER the batch's robots gate, so rules for hosts
       * being gated in the current batch are never evicted mid-gate; an
@@ -99,32 +93,37 @@ final case class CrawlConfig(
       * cap per loop shard (a 10^10-URL deployment shards by host-hash
       * range and each shard broadcasts only its own cap). */
     robotsCacheSize: Int = 400,
-    /** enqueue robots.txt Sitemap URLs into the frontier (L7;
-      * domaincache.py:102-167 expands recursively — recursion here is the
-      * loop itself: sitemap pages get link-scanned like any page). */
-    expandSitemaps: Boolean = true,
-    /** side-fetch handler social APIs in the same partition (J-5;
-      * defaulturlhandler.py:145-207). */
-    fetchSocial: Boolean = true,
-    /** compact the pending-frontier delta parts every K batches; between
-      * compactions the per-batch state write is O(batch), not O(frontier).
-      * With a store and `durableDeltas`, K is also the base cadence. */
+    /** base cadence, in batches: a base bakes the lazy transitions and
+      * tombstones of the frontier and the seen increments into one part
+      * each — one O(|state|) rewrite amortized over K O(batch) appends.
+      * An in-memory run (no store) takes a base every K batches. With a
+      * store, K is the cadence only under `durableDeltas`. */
     compactEvery: Int = 4,
-    /** base cadence of the durable store, which has one layout: base
-      * snapshots (full frontier/seen/crawl_log), delta snapshots (pending
-      * rows, done rows, dequeued-key and redirect tombstones, seen
-      * increment, log rows — O(batch) bytes) and a batch_commit marker.
-      * A non-empty batch writes either a base or its deltas, never both.
-      * false = a base every batch (simple time travel; O(state) write per
-      * batch). true = the 10^10-frontier shape: a base every
-      * `compactEvery` batches, deltas in between. resume() reads any
-      * store under either setting. */
+    /** base cadence of the durable store; it matters only with a store.
+      * The store has one layout: base snapshots (full
+      * frontier/seen/crawl_log), delta snapshots (pending rows, done rows,
+      * dequeued-key and redirect tombstones, seen increment, log rows —
+      * O(batch) bytes) and a batch_commit marker. A non-empty batch writes
+      * either a base or its deltas, never both. false = a base every
+      * batch (simple time travel; O(state) write per batch). true = the
+      * 10^10-frontier shape: a base every `compactEvery` batches, deltas
+      * in between. resume() reads any store under either setting. */
     durableDeltas: Boolean = false,
     /** the global contiguous crawl-sequence column is the crawl-order
       * parity artifact (range-partitioned sort + zipWithIndex). At
       * production scale turn it off: ordering stays deterministic via
       * url_hash, but no global pass is spent on a contiguous counter. */
-    emitCrawlSeq: Boolean = true)
+    emitCrawlSeq: Boolean = true) {
+
+  /** robots-gate UA — the reference checks the request's agent, not "*"
+    * (baseurl.py:221-223). */
+  def userAgent: String = FetchRequest.UserAgent
+
+  /** partitions one host's URLs spread over for fetch when `delayS` is 0
+    * (`host_hash_salted`); the dequeue still treats the host as one
+    * budget unit. */
+  def saltBuckets: Int = 4
+}
 
 final case class CrawlResult(
     frontier: DataFrame,
@@ -149,8 +148,9 @@ final case class CrawlResult(
   *
   * State is kept as append-only delta parts (pending rows + dequeued-key
   * tombstones + terminal rows + seen increments), each checkpointed once
-  * when produced, compacted every `compactEvery` batches — the per-batch
-  * write cost is proportional to the batch, not to the frontier
+  * when produced, and folded into one base at the base cadence (see
+  * `compactEvery`) — between bases the per-batch write cost is
+  * proportional to the batch, not to the frontier
   * (10^10-frontier design scale). Deterministic: batch time derives from
   * the batch number, the dequeue is a total order, extracted links are
   * sorted before enqueue.
@@ -161,7 +161,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
   import spark.implicits._
 
   private def batchTime(batch: Int): Timestamp =
-    Timestamp.from(config.startTime.plusSeconds(60L * batch))
+    Timestamp.from(CrawlLoop.StartTime.plusSeconds(60L * batch))
 
   /** Seeds → initial frontier (batch 0). */
   def seedFrontier(seeds: Seq[String]): DataFrame = {
@@ -184,17 +184,14 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
   private def fetchRobots(missingHosts: DataFrame, batch: Int,
       parts: Int): (DataFrame, Long) = {
     val internetL = internet
-    val timeoutS = config.timeoutS
-    val ua = config.userAgent
     import spark.implicits._
     val obs = org.apache.spark.sql.Observation()
     val fetched = missingHosts.select("host").as[String]
       .repartition(parts, col("host"))
       .mapPartitions { hosts =>
         hosts.map { host =>
-          val req = FetchRequest.default(s"https://$host/robots.txt")
-            .copy(timeoutS = timeoutS, userAgent = ua)
-          val resp = FetchClient.fetchOne(req, internetL)
+          val resp = FetchClient.fetchOne(
+            FetchRequest.default(s"https://$host/robots.txt"), internetL)
           (host,
             if (resp.status == 200) resp.text.getOrElse("") else "",
             resp.status)
@@ -341,12 +338,20 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // LAST in each batch's durable commit. A crash anywhere mid-commit
         // leaves no marker for that batch, so resume anchors on the
         // previous complete batch and deterministically replays the torn
-        // one (overwriting its partial snapshots); without this, a
-        // multi-table commit has no atomicity and a torn batch would
-        // resume into a state no uninterrupted run produces.
+        // one; without this, a multi-table commit has no atomicity and a
+        // torn batch would resume into a state no uninterrupted run
+        // produces.
         val marker = st.latestSnapshot("batch_commit").getOrElse(
           throw new IllegalStateException(
             "no committed batch marker to resume"))
+        // the torn batch's partial snapshots are dropped before its
+        // replay: the replay rewrites only the tables it commits, so any
+        // other would outlive it (a base's frontier when the batch is
+        // replayed as a delta batch, say)
+        (Seq("frontier", "seen", "crawl_log") ++ deltaTables.map(_._1))
+          .foreach { t =>
+            st.snapshots(t).filter(_ > marker).foreach(st.drop(t, _))
+          }
         // every snapshot loaded below is lineage-verified against disk
         // first (part names + byte sizes from its manifest) so a torn or
         // tampered snapshot refuses to resume instead of silently
@@ -366,15 +371,13 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // it, loaded into the SAME parts arrays the in-memory views are
         // built from — tombstone semantics are therefore identical to an
         // uninterrupted run. Deltas at or before the base are already in
-        // it; deltas past the marker belong to a torn batch. A base is a
-        // batch with all three base tables: a crash inside a base commit
-        // can leave its frontier alone, and a replay of that batch under
-        // the delta cadence does not overwrite it.
-        def committed(sn: Long) = sn <= marker
+        // it. A base is a batch with all three base tables: a store
+        // written before torn snapshots were dropped can hold the lone
+        // frontier of a crash inside a base commit.
         val withBase = Seq("seen", "crawl_log").map(st.snapshots(_).toSet)
         val baseSnap = st.snapshots("frontier")
-          .filter(sn => committed(sn) && withBase.forall(_(sn))).lastOption
-        def after(sn: Long) = baseSnap.forall(_ < sn) && committed(sn)
+          .filter(sn => withBase.forall(_(sn))).lastOption
+        def after(sn: Long) = baseSnap.forall(_ < sn)
         def deltas(table: String): Seq[DataFrame] =
           st.snapshots(table).filter(after).map(readVerified(table, _))
         baseSnap.foreach { b =>
@@ -418,8 +421,9 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     def markCommitted(): Unit =
       deltaTables.indices.foreach(i => marks(i) = deltaTables(i)._2.length)
     if (seedsOpt.isEmpty) markCommitted()
-    // the one reader of durableDeltas: how often a batch writes a base
-    val baseEvery = if (config.durableDeltas) config.compactEvery else 1
+    // how often a batch writes a base: durableDeltas is read only here
+    val baseEvery =
+      if (store.isDefined && !config.durableDeltas) 1 else config.compactEvery
     val fetchParts =
       if (config.fetchPartitions > 0) config.fetchPartitions
       else spark.sessionState.conf.numShufflePartitions
@@ -453,30 +457,26 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         //      (J-2). One small job per batch; its cost when nothing is
         //      missing is the anti-join scan, which at design scale is
         //      co-partitioned (both sides bucketed by host) ------------
-        var sitemapUrls: Option[DataFrame] = None
-        var newRulesOpt: Option[DataFrame] = None
-        if (config.respectRobots || config.expandSitemaps) {
-          val batchHostsDf = dequeued.select("host").distinct()
-          val missing =
-            if (rulesParts.isEmpty) batchHostsDf
-            else batchHostsDf.join(rulesView.select("host"),
-              Seq("host"), "left_anti")
-          val (newRules, newCount) = fetchRobots(missing, batch, fetchParts)
-          counterRows += ((batch, "robots_fetched", newCount))
-          if (newCount > 0) {
+        val batchHostsDf = dequeued.select("host").distinct()
+        val missing =
+          if (rulesParts.isEmpty) batchHostsDf
+          else batchHostsDf.join(rulesView.select("host"),
+            Seq("host"), "left_anti")
+        val (newRules, newCount) = fetchRobots(missing, batch, fetchParts)
+        counterRows += ((batch, "robots_fetched", newCount))
+        // the new rules' Sitemap URLs are enqueued (L7; domaincache.py:
+        // 102-167 expands recursively — recursion here is the loop
+        // itself: sitemap pages get link-scanned like any page)
+        val sitemapUrls =
+          if (newCount == 0) None
+          else {
             rulesParts += newRules
             rulesCount += newCount
-            newRulesOpt = Some(newRules)
-          }
-          if (config.expandSitemaps) {
             val sitemapLinesUdf =
               udf((txt: String) => Robots.sitemapLines(txt))
-            sitemapUrls = newRulesOpt.map(_
-              .filter(col("robots_status") === 200)
-              .select(explode(sitemapLinesUdf(col("robots_txt")))
-                .as("url")))
+            Some(newRules.filter(col("robots_status") === 200)
+              .select(explode(sitemapLinesUdf(col("robots_txt"))).as("url")))
           }
-        }
 
         // ---- robots gate: broadcast rules join + allow UDF --------------
         // The gate joins the PRE-eviction rules (this batch's hosts are
@@ -485,7 +485,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // gated right now, and a null robots_txt can only mean the robots
         // fetch itself failed (⇒ allowed, like the reference).
         val gated =
-          if (config.respectRobots && rulesParts.nonEmpty) {
+          if (rulesParts.nonEmpty) {
             val ua = config.userAgent
             val allowedUdf = udf { (txt: String, url: String) =>
               txt == null || txt.isEmpty || Robots.allows(txt, ua, url)
@@ -499,12 +499,16 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val toFetch = gated.filter(col("allowed"))
 
         // ---- host-partitioned, deterministically ordered fetch+parse ----
+        // the per-host gap holds only where one partition fetches all of a
+        // host's URLs in sequence; without a gap, the salted key spreads a
+        // hot host over saltBuckets partitions
         val internetL = internet
         val cfg = config
+        val hostKey = if (config.delayS > 0) "host_hash" else "host_hash_salted"
         val fetched: Dataset[FetchedPage] =
           toFetch
-            .select("url", "url_hash", "host", "host_hash_salted", "seq")
-            .repartition(fetchParts, col("host_hash_salted"))
+            .select("url", "url_hash", "host", hostKey, "seq")
+            .repartition(fetchParts, col(hostKey))
             .sortWithinPartitions("host", "seq")
             .as[(String, Long, String, Long, Long)]
             .mapPartitions { it =>
@@ -605,7 +609,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             when(!col("allowed"), FrontierRow.StateExcluded)
               .when(col("fetch_status").isNotNull &&
                 Statuses.retryCol(col("fetch_status")) &&
-                col("tries") + 1 < config.maxTries, FrontierRow.StatePending)
+                col("tries") + 1 < CrawlLoop.MaxTries, FrontierRow.StatePending)
               .when(col("fetch_status").isNotNull &&
                 Statuses.invalidCol(col("fetch_status")),
                 FrontierRow.StateFailed)
@@ -652,52 +656,45 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         }
 
       }
-      // durable commits sit OUTSIDE the n > 0 block: an EMPTY batch still
-      // commits its (cheap) batch_commit marker, so the resume anchor
-      // advances across drained batches instead of replaying them on
-      // every resume (r4 ADVICE #2). It writes no base — nothing changed
-      // — and no delta beyond a not yet durable seed wave.
-      store match {
-        case Some(s) =>
-          val lineage = Map("batch" -> batch.toString, "dequeued" -> n.toString)
-          if (n > 0 && (batch + 1) % baseEvery == 0) {
-            // base batch: the full tables and no delta slices (resume
-            // skips deltas at or before a base); reading the base back
-            // also compacts the in-memory parts
+      // ---- base: the one compaction. It bakes the lazy transitions and
+      //      tombstones into one frontier part and one seen part; with a
+      //      store the frames are the committed base tables read back.
+      //      An EMPTY batch writes no base — nothing changed ----------------
+      val lineage = Map("batch" -> batch.toString, "dequeued" -> n.toString)
+      if (n > 0 && (batch + 1) % baseEvery == 0) {
+        val (frontierBase, seenBase) = store match {
+          case Some(s) =>
+            // the full tables and no delta slices (resume skips deltas
+            // at or before a base)
             s.commit("frontier", batch, frontierView, lineage)
             s.commit("seen", batch, seenView, lineage)
             s.commit("crawl_log", batch, unionAll(logParts.toSeq), lineage)
-            setFrontierBase(s.read(spark, "frontier", Some(batch)).get)
-            seenParts.clear()
-            seenParts += s.read(spark, "seen", Some(batch)).get
-          } else {
-            // the 10^10-frontier shape: only this batch's parts — O(batch)
-            // bytes, not O(state)
-            deltaTables.zip(marks).foreach { case ((table, parts), mark) =>
-              if (parts.length > mark)
-                s.commit(table, batch, unionAll(parts.drop(mark).toSeq),
-                  lineage)
-            }
-          }
-          // the marker is written LAST: a batch is durable iff its
-          // marker exists (resume anchors on it — see runInternal)
-          s.commit("batch_commit", batch,
-            Seq((batch, n)).toDF("batch", "dequeued"), lineage)
-          markCommitted()
-        case None =>
-          // no store: compact the pending + seen views every K batches
-          // — one O(|state|) rewrite amortized over K O(batch) appends;
-          // bakes the lazy transitions and tombstones into one part each
-          if (n > 0 && (batch + 1) % config.compactEvery == 0) {
-            val compacted = pendingView.localCheckpoint(true)
-            pendingParts.clear()
-            pendingParts += compacted
-            dequeuedKeyParts.clear()
-            redirectTombstoneParts.clear()
-            val seenCompacted = seenView.localCheckpoint(true)
-            seenParts.clear()
-            seenParts += seenCompacted
-          }
+            (s.read(spark, "frontier", Some(batch)).get,
+              s.read(spark, "seen", Some(batch)).get)
+          case None =>
+            (frontierView.localCheckpoint(true), seenView.localCheckpoint(true))
+        }
+        setFrontierBase(frontierBase)
+        seenParts.clear()
+        seenParts += seenBase
+      } else store.foreach { s =>
+        // the 10^10-frontier shape: only this batch's parts — O(batch)
+        // bytes, not O(state); an empty batch writes none beyond a not
+        // yet durable seed wave
+        deltaTables.zip(marks).foreach { case ((table, parts), mark) =>
+          if (parts.length > mark)
+            s.commit(table, batch, unionAll(parts.drop(mark).toSeq), lineage)
+        }
+      }
+      // the marker sits OUTSIDE the n > 0 condition and is written LAST: a
+      // batch is durable iff its marker exists (resume anchors on it — see
+      // runInternal), and an EMPTY batch still commits it, so the resume
+      // anchor advances across drained batches instead of replaying them
+      // on every resume (r4 ADVICE #2)
+      store.foreach { s =>
+        s.commit("batch_commit", batch,
+          Seq((batch, n)).toDF("batch", "dequeued"), lineage)
+        markCommitted()
       }
     }
     CrawlResult(frontierView, seenView, unionAll(logParts.toSeq),
@@ -709,15 +706,20 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
 
 object CrawlLoop {
 
+  /** fetch attempts per URL before a retryable status becomes terminal */
+  val MaxTries = 3
+
+  /** batch 0's time; batch b runs at StartTime + b minutes, so batch time
+    * derives from the batch number and a crawl replays exactly */
+  val StartTime: Instant = Instant.parse("2024-01-01T00:00:00Z")
+
   /** Fused fetch + parse for one partition. Pure w.r.t. its inputs — the
     * only nondeterminism (crawl_time_ms) never feeds back into state. */
   def fetchAndParse(it: Iterator[(String, Long, String, Long, Long)],
       internet: SyntheticInternet, config: CrawlConfig): Iterator[FetchedPage] = {
     val lastFetchNanos = scala.collection.mutable.Map[String, Long]()
     it.map { case (url, urlHash, host, _, seq) =>
-      val req = FetchRequest.default(url).copy(delayS = config.delayS,
-        bytesLimit = config.bytesLimit, timeoutS = config.timeoutS,
-        userAgent = config.userAgent)
+      val req = FetchRequest.default(url).copy(delayS = config.delayS)
       // handler dispatch may rewrite the URL before fetch (baseurl.py:305)
       val dispatched = Handlers.dispatch(req.url)
       val fetchUrl = dispatched.map(_.url).getOrElse(req.url)
@@ -738,8 +740,7 @@ object CrawlLoop {
       // here they are just one more sequential request on the same host
       // budget slot)
       val social: Social.SocialData =
-        if (!config.fetchSocial) Social.SocialData()
-        else dispatched.flatMap(_.socialApiUrl) match {
+        dispatched.flatMap(_.socialApiUrl) match {
           case Some(api) =>
             val sresp = FetchClient.fetchOne(req.copy(url = api), internet)
             if (Statuses.isValid(sresp.status))
@@ -755,10 +756,9 @@ object CrawlLoop {
           PageFactory.recognize(resp.url, resp.headers, resp.text)
         else None
       val meta = PageFactory.toPageMeta(resp.url, parsed)
-      val batchInstant = config.startTime
       val entryLinks: Seq[String] = parsed match {
         case Some(PageFactory.ParsedRss(m)) =>
-          m.entries(batchInstant).map(_.link)
+          m.entries(StartTime).map(_.link)
         case Some(PageFactory.ParsedOpml(entries, _)) => entries.map(_.url)
         case _ => Seq.empty
       }

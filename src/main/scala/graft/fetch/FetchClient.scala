@@ -7,12 +7,12 @@ import graft.model.{FetchRequest, FetchResponse}
 import graft.http.{ContentTypes, Statuses}
 import graft.parse.{Hashing, PageValidity}
 
-/** The per-partition fetch client — S1-S5 of the operator inventory.
+/** The per-request fetch client — S1-S5 of the operator inventory.
   *
-  * Runs inside `mapPartitions` over a host-partitioned request Dataset:
-  * requests for one host land in one partition (J-3), are fetched
-  * sequentially in deterministic order, and honor a per-host minimum gap
-  * (the reference's `delay_s`, webtoolkit/request.py:31). Guards are
+  * Called inside `mapPartitions`; the per-host minimum gap (the
+  * reference's `delay_s`, webtoolkit/request.py:31) is kept by the
+  * caller, `CrawlLoop.fetchAndParse`, which fetches one host's requests
+  * in one partition, in sequence, when the gap is set (J-3). Guards are
   * header-first like the reference (webtoolkit/crawlers/
   * requestscrawler.py:49-70): byte limit and accept types are checked
   * before the body is materialized.
@@ -216,26 +216,5 @@ object FetchClient {
       recognizedContentType = recognized,
       bodyHash = decodedText.flatMap(Hashing.md5)
         .orElse(Hashing.md5Binary(body)))
-  }
-
-  /** Partition-level fetch: sequential within the partition, per-host
-    * minimum-gap politeness (token bucket per host). Requests must arrive
-    * host-partitioned and pre-sorted for deterministic order. */
-  def fetchPartition(requests: Iterator[FetchRequest],
-      internet: SyntheticInternet): Iterator[FetchResponse] = {
-    val lastFetchNanos = mutable.Map[String, Long]()
-    requests.map { req =>
-      val host = graft.url.UrlKit.domainOnly(req.url).getOrElse("")
-      if (req.delayS > 0) {
-        lastFetchNanos.get(host).foreach { last =>
-          val elapsed = System.nanoTime() - last
-          val needed = req.delayS * 1000000000L
-          if (elapsed < needed) Thread.sleep((needed - elapsed) / 1000000L)
-        }
-      }
-      val resp = fetchOne(req, internet)
-      lastFetchNanos(host) = System.nanoTime()
-      resp
-    }
   }
 }

@@ -13,22 +13,6 @@ import graft.url.UrlKit
 object Frontier {
 
   val cleanUdf = udf((url: String) => UrlKit.cleanedLink(url).orNull)
-  val isWebLinkUdf = udf((url: String) => UrlKit.isWebLink(url))
-  val isWebpageLinkUdf = udf((url: String) => UrlKit.isWebpageLink(url))
-  val domainOnlyUdf = udf((url: String) => UrlKit.domainOnly(url).orNull)
-  val isAnalyticsUdf = udf((url: String) => UrlKit.isAnalytics(url))
-  val isLinkServiceUdf = udf((url: String) => UrlKit.isLinkService(url))
-
-  /** One fused pass per link: canonicalize then admission-check
-    * (is_web_link ∧ ¬analytics ∧ ¬link-service — P3, P13, P14); null when
-    * rejected. Fused because each separate predicate re-parses the URL. */
-  val admitUdf = udf { (url: String) =>
-    UrlKit.cleanedLink(url) match {
-      case Some(clean) if clean.nonEmpty && UrlKit.isWebLink(clean) &&
-        !UrlKit.isAnalytics(clean) && !UrlKit.isLinkService(clean) => clean
-      case _ => null
-    }
-  }
 
   /** Canonicalize + admission-filter raw links → frontier-shaped rows.
     * `saltBuckets` spreads one hot host over N partitions; the dequeue

@@ -26,10 +26,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object SeenSet {
 
-  /** Candidate columns required: `url` (canonical). Adds `url_hash`. */
-  def withHash(df: DataFrame): DataFrame =
-    df.withColumn("url_hash", xxhash64(col("url")))
-
   /** Exact-only path: candidates not present in `seen`. */
   def filterNewExact(candidates: DataFrame, seen: DataFrame): DataFrame =
     candidates.join(seen.select("url_hash", "url"), Seq("url_hash", "url"),

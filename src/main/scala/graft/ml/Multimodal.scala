@@ -59,9 +59,6 @@ object Multimodal {
     } catch { case _: Exception => None }
   }
 
-  val resizeUdf = udf((bytes: Array[Byte], w: Int, h: Int) =>
-    resizeImage(bytes, w, h))
-
   /** REAL audio feature extraction for PCM/WAV via `javax.sound.sampled`
     * (ships with the JDK — no external codecs needed): decode to signed
     * 16-bit PCM, mono-mix, and compute an 8-dim feature vector of actual
@@ -191,9 +188,6 @@ object Multimodal {
     while (i < math.min(bytes.length, 4096)) { h = ImageKit.mix(h ^ bytes(i)); i += 1 }
     (0 until n).map(f => (f, ImageKit.mix(h + f)))
   }
-
-  val sampleFramesUdf = udf((bytes: Array[Byte], n: Int) =>
-    sampleFramesStub(bytes, n))
 
   /** Full image-corpus metadata pipeline: binary column in, typed metadata
     * out, nulls for undecodable rows kept for auditability. */

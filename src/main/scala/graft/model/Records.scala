@@ -37,12 +37,16 @@ object FetchRequest {
   val TypeHead = "head"
   val TypeFull = "full"
 
+  /** Fixed deterministic UA (a randomized ua_generator would break
+    * replay); the crawl loop's robots gate checks the same agent. */
+  val UserAgent = "Mozilla/5.0 (X11; Linux x86_64) graft/1.0"
+
   /** Defaults mirror the reference config: 20 s crawler timeout
     * (crawlerinterface.py:253-259), 5 MB byte limit (webconfig.py:128-129),
-    * fixed deterministic UA (randomized ua_generator would break replay). */
+    * [[UserAgent]]. */
   def default(url: String): FetchRequest = FetchRequest(
     url = url,
-    userAgent = "Mozilla/5.0 (X11; Linux x86_64) graft/1.0",
+    userAgent = UserAgent,
     requestHeaders = Map.empty,
     timeoutS = 20,
     delayS = 0,

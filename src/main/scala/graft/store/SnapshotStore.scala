@@ -1,7 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iceberg-*semantics* snapshot store over plain Parquet (SURVEY.md §7.4).
@@ -9,10 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * No Iceberg jars ship in this environment, so the observable properties
   * the north rule needs — snapshot isolation, exact resume, time travel to
   * batch i, per-partition lineage — are provided by: one immutable Parquet
-  * directory per (table, snapshot), a manifest JSON per snapshot recording
-  * the data path + row count + lineage note, and an atomically-renamed
-  * `_latest.json` pointer. Readers only ever follow a fully-written
-  * manifest, writers never mutate a committed snapshot. Swapping in a real
+  * directory per (table, snapshot) and a manifest JSON per snapshot
+  * recording the data path + row count + lineage note. The manifest is the
+  * commit point: readers only ever follow a fully-written manifest, and the
+  * latest snapshot is the highest id that has one. Writers never mutate a
+  * committed snapshot; [[drop]] removes one whole. Swapping in a real
   * Iceberg catalog touches only this file.
   */
 final class SnapshotStore(root: String) {
@@ -22,8 +22,8 @@ final class SnapshotStore(root: String) {
     tableDir(table).resolve(f"snap-$snapshot%06d")
 
   /** Commit `df` as snapshot `snapshot` of `table`. Data first, manifest
-    * second, pointer rename last — a crash leaves either the old or the
-    * new snapshot fully visible, never a torn one. The manifest row count
+    * last — a crash leaves either the old or the new snapshot fully
+    * visible, never a torn one. The manifest row count
     * rides the write as an observed metric: one evaluation per commit. */
   def commit(table: String, snapshot: Long, df: DataFrame,
       lineage: Map[String, String] = Map.empty): Unit = {
@@ -52,12 +52,21 @@ final class SnapshotStore(root: String) {
          |"lineage":$lineageJson}""".stripMargin.replace("\n", "")
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("manifest.json"), manifest)
+  }
 
-    val tmp = tableDir(table).resolve("_latest.json.tmp")
-    Files.createDirectories(tableDir(table))
-    Files.writeString(tmp, manifest)
-    Files.move(tmp, tableDir(table).resolve("_latest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  /** Drop snapshot `snapshot` of `table`, if present. The manifest goes
+    * first, so the snapshot leaves [[snapshots]] before any of its data
+    * does; a crash midway leaves only unlisted data, which a later commit
+    * of the same id overwrites. */
+  def drop(table: String, snapshot: Long): Unit = {
+    val dir = snapshotDir(table, snapshot)
+    Files.deleteIfExists(dir.resolve("manifest.json"))
+    if (Files.exists(dir)) {
+      val stream = Files.walk(dir)
+      try stream.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+      finally stream.close()
+    }
   }
 
   /** All committed snapshot ids of `table`, ascending (a snapshot counts
@@ -80,12 +89,8 @@ final class SnapshotStore(root: String) {
   }
 
   /** Latest committed snapshot id of `table`, if any. */
-  def latestSnapshot(table: String): Option[Long] = {
-    val p = tableDir(table).resolve("_latest.json")
-    if (!Files.exists(p)) return None
-    val text = Files.readString(p, StandardCharsets.UTF_8)
-    extractLong(text, "snapshot")
-  }
+  def latestSnapshot(table: String): Option[Long] =
+    snapshots(table).lastOption
 
   /** Read a specific snapshot (time travel), or the latest. A snapshot
     * is readable only once its manifest exists — the manifest is written
@@ -146,9 +151,4 @@ final class SnapshotStore(root: String) {
 
   private def escape(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  private def extractLong(json: String, key: String): Option[Long] = {
-    val m = s""""$key"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json)
-    m.map(_.group(1).toLong)
-  }
 }

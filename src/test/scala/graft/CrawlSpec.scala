@@ -230,9 +230,9 @@ class CrawlSpec extends AnyFunSuite {
   test("a torn base batch replayed as a delta batch resumes exactly") {
     // batch 2 of a base-every-batch run dies after its frontier base
     // landed (the frontier commits first, the marker last). Resuming under
-    // the delta cadence replays batch 2 as deltas and leaves that frontier
-    // snapshot at the new marker; the next resume must not take it as
-    // batch 2's base, since seen and crawl_log never landed there.
+    // the delta cadence drops that frontier snapshot, which the replay of
+    // batch 2 as deltas would not overwrite, and the next resume equals
+    // the uninterrupted run.
     val seeds = Seq("https://site-0.test/")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-torn-base").toString
@@ -244,6 +244,8 @@ class CrawlSpec extends AnyFunSuite {
     newLoop(delta, Some(store)).resume()
     assert(store.latestSnapshot("batch_commit").contains(2L))
     assert(store.snapshots("crawl_log_delta") == Seq(2L))
+    assert(store.snapshots("frontier") == Seq(0L, 1L),
+      "the torn batch's frontier snapshot 2 must be dropped")
     val resumed = newLoop(delta, Some(store)).resume()
     val fresh = newLoop(CrawlConfig(maxBatches = 4)).run(seeds)
     def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
@@ -254,6 +256,28 @@ class CrawlSpec extends AnyFunSuite {
     assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
       .toSeq ==
       fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
+  }
+
+  test("per-host delay holds across salt buckets: one host's fetches are serial") {
+    // six pages of one host whose salted keys split them 3/3 over two of
+    // the four fetch partitions; with a 1 s per-host gap the batch cannot
+    // finish before five gaps have passed, where two concurrent
+    // partitions would take two
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val seeds = (0 until 6).map(j => s"https://site-2.test/page/$j")
+    val cfg = CrawlConfig(maxBatches = 1, delayS = 1, fetchPartitions = 4)
+    val perPartition = newLoop(cfg).seedFrontier(seeds)
+      .groupBy(pmod(hash(col("host_hash_salted")), lit(4))).count()
+      .collect().map(_.getLong(1))
+    assert(perPartition.length >= 2 && perPartition.max <= seeds.length / 2,
+      s"salted split ${perPartition.mkString("/")}")
+    newLoop(cfg.copy(delayS = 0)).run(seeds) // warm-up: same batch, no gap
+    val t0 = System.nanoTime()
+    val result = newLoop(cfg).run(seeds)
+    val wallS = (System.nanoTime() - t0) / 1e9
+    assert(result.crawlLog.count() == seeds.length)
+    assert(wallS >= seeds.length - 1,
+      f"$wallS%.2f s for ${seeds.length} pages of one host at a 1 s gap")
   }
 
   test("per-host budget limits fetches per batch") {
