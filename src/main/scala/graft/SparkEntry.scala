@@ -256,36 +256,10 @@ object SparkEntry {
         "vec_id", "embedding", threshold = 0.9)
         .orderBy("id_a", "id_b")
     }),
-    "q25_dedup_clusters" -> ((s, dir) => {
-      // keep-one-per-cluster assignment: exact-Jaccard pairs (the
-      // oracle-verifiable edge set) → connected components (partition-
-      // local union-find over a halving boundary graph); the DuckDB
-      // mirror recomputes the same components with a recursive CTE.
-      // The deterministic half-corpus subset keeps the DuckDB mirror's
-      // all-pairs edge recomputation inside the driver's gate budget;
-      // the operator itself is subset-agnostic
-      val docs = withPlantedDups(
-        ld(s, dir, "documents").filter(col("doc_id") % 2 === 0), s)
-      val edges = Dedup.exactJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.6)
-      Dedup.connectedComponents(
-        docs.select(col("doc_id").as("id")), edges)
-        .select(col("id").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
-    "q27_dedup_clusters_star" -> ((s, dir) => {
-      // the same cluster assignment as q25 through the same CC function
-      // (this key once ran large-star/small-star contraction); the key
-      // and the shared recursive-CTE DuckDB mirror stay
-      val docs = withPlantedDups(
-        ld(s, dir, "documents").filter(col("doc_id") % 2 === 0), s)
-      val edges = Dedup.exactJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.6)
-      Dedup.connectedComponents(
-        docs.select(col("doc_id").as("id")), edges)
-        .select(col("id").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    }),
+    "q25_dedup_clusters" -> dedupClusters,
+    // q27 keeps its own key: the driver and perfbench run both keys by
+    // name, and perfbench checks that their labels are equal
+    "q27_dedup_clusters_star" -> dedupClusters,
     "q26_repetition" -> ((s, dir) => {
       // repetition-based quality signals (Gopher-style), pure built-ins —
       // stays inside whole-stage codegen, no UDF
@@ -330,6 +304,23 @@ object SparkEntry {
         .orderBy("image_id")
     }))
 
+  /** q25 and q27: keep-one-per-cluster assignment — exact-Jaccard pairs
+    * (the oracle-verifiable edge set) → connected components (partition-
+    * local union-find over a halving boundary graph); the DuckDB mirror
+    * recomputes the same components with a recursive CTE. The
+    * deterministic half-corpus subset keeps the DuckDB mirror's all-pairs
+    * edge recomputation inside the driver's gate budget; the operator
+    * itself is subset-agnostic. */
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
+    val docs = withPlantedDups(
+      ld(s, dir, "documents").filter(col("doc_id") % 2 === 0), s)
+    val edges = Dedup.exactJaccardPairs(docs, "doc_id", "text",
+      n = 3, threshold = 0.6)
+    Dedup.connectedComponents(docs.select(col("doc_id").as("id")), edges)
+      .select(col("id").as("doc_id"), col("component"))
+      .orderBy("doc_id")
+  }
+
   /** Plant deterministic near-duplicates: copies of the 3 lowest-id docs
     * with one word appended, ids offset by 10^9 — guarantees the near-dup
     * queries demonstrate detection on any corpus. */
@@ -348,9 +339,9 @@ object SparkEntry {
     sys.env.getOrElse("GRAFT_FIXTURES_DIR",
       new java.io.File("fixtures/golden").getAbsolutePath)
 
-  /** Shared by q25 (neighbor-min) and q27 (large-star/small-star): the
-    * component assignment is algorithm-independent, so one recursive-CTE
-    * DuckDB derivation independently verifies both implementations. */
+  /** Shared by q25 and q27, which both run [[dedupClusters]]: one
+    * recursive-CTE DuckDB derivation verifies the component assignment
+    * independently of the algorithm that computes it. */
   private val dedupClustersOracleSql: String =
     """WITH RECURSIVE base AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),

@@ -64,9 +64,10 @@ final case class CrawlConfig(
     bloomExpected: Long = 1L << 20,
     /** url_hash ranges the seen-Bloom is partitioned into (see
       * SeenSet.PartitionedBloom). 1 = a single filter; at 10^10-URL
-      * design scale set ~4096 so per-range filters stay MB-sized, live
-      * co-bucketed with the seen table's url_hash ranges, and capacity
-      * scales with the range count instead of auto-disabling. */
+      * design scale set ~4096 so per-range filters stay MB-sized and
+      * capacity scales with the range count instead of auto-disabling.
+      * Every task still receives all ranges by broadcast: no code places
+      * a range's filter with that range's seen rows. */
     bloomRanges: Int = 1,
     /** host-hash-range sharding: this loop instance dequeues (and
       * therefore fetches, robots-gates and rules-caches) ONLY hosts with
@@ -175,12 +176,13 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     * (J-2; replaces the reference's driver-singleton DomainCache,
     * domaincache.py:170-259). `missingHosts` is itself a distributed
     * frame (batch hosts anti-joined against the rules table) — NO
-    * driver-side host collection anywhere (r3 VERDICT #3): at 10^10-URL
-    * scale both sides of that anti-join live bucketed by host, so the
-    * miss computation is a co-partitioned join, and this stage shuffles
-    * only the miss list. Returns (host, robots_txt, robots_status,
-    * fetched_batch), checkpointed, with the new-row count riding the
-    * checkpoint as an observed metric. */
+    * driver-side host collection anywhere (r3 VERDICT #3). Neither side
+    * of that anti-join is bucketed by host, so the planner moves rows for
+    * it like for any join; keeping both sides bucketed by host, so the
+    * anti-join is co-partitioned and only the miss list shuffles, is
+    * design-scale work that has not been built. Returns (host,
+    * robots_txt, robots_status, fetched_batch), checkpointed, with the
+    * new-row count riding the checkpoint as an observed metric. */
   private def fetchRobots(missingHosts: DataFrame, batch: Int,
       parts: Int): (DataFrame, Long) = {
     val internetL = internet
@@ -455,8 +457,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // ---- robots refresh: distributed miss list (batch hosts
         //      anti-join rules), distributed fetch of only the misses
         //      (J-2). One small job per batch; its cost when nothing is
-        //      missing is the anti-join scan, which at design scale is
-        //      co-partitioned (both sides bucketed by host) ------------
+        //      missing is the anti-join, which is not co-partitioned
+        //      (nothing buckets crawl state by host) -------------------
         val batchHostsDf = dequeued.select("host").distinct()
         val missing =
           if (rulesParts.isEmpty) batchHostsDf
@@ -480,22 +482,20 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
 
         // ---- robots gate: broadcast rules join + allow UDF --------------
         // The gate joins the PRE-eviction rules (this batch's hosts are
-        // always present — fetched above if missing); the LRU trim runs
+        // always present — fetched above if missing, so the rules parts
+        // are never empty here, and eviction keeps one); the LRU trim runs
         // after the batch, so rules are never evicted for hosts being
         // gated right now, and a null robots_txt can only mean the robots
         // fetch itself failed (⇒ allowed, like the reference).
-        val gated =
-          if (rulesParts.nonEmpty) {
-            val ua = config.userAgent
-            val allowedUdf = udf { (txt: String, url: String) =>
-              txt == null || txt.isEmpty || Robots.allows(txt, ua, url)
-            }
-            dequeued
-              .join(broadcast(rulesView
-                .select("host", "robots_txt")), Seq("host"), "left")
-              .withColumn("allowed", allowedUdf(col("robots_txt"), col("url")))
-              .drop("robots_txt")
-          } else dequeued.withColumn("allowed", lit(true))
+        val ua = config.userAgent
+        val allowedUdf = udf { (txt: String, url: String) =>
+          txt == null || txt.isEmpty || Robots.allows(txt, ua, url)
+        }
+        val gated = dequeued
+          .join(broadcast(rulesView
+            .select("host", "robots_txt")), Seq("host"), "left")
+          .withColumn("allowed", allowedUdf(col("robots_txt"), col("url")))
+          .drop("robots_txt")
         val toFetch = gated.filter(col("allowed"))
 
         // ---- host-partitioned, deterministically ordered fetch+parse ----

@@ -102,8 +102,6 @@ final case class SyntheticInternet(config: SyntheticConfig) extends Serializable
   private def notFound(url: String): String =
     s"<html><head><title>404 Not Found</title></head><body>$url</body></html>"
 
-  def siteRoot(k: Int): String = s"https://site-$k.test"
-
   private def redirect(status: Int, location: String): SyntheticResponse =
     SyntheticResponse(status,
       Map("Location" -> location, "Content-Length" -> "0"),

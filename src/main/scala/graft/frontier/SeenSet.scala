@@ -32,21 +32,19 @@ object SeenSet {
       "left_anti")
 
   /** Hash-range-partitioned Bloom: R independent filters, each owning the
-    * url_hash range `pmod(h, R) == r` — the 10^10-URL design scale path
-    * (replaces the single-filter auto-disable caveat). Why ranges, and
-    * why keyed on url_hash: the exact anti-join that the filter
-    * accelerates is keyed on url_hash, so at design scale the seen table
-    * is bucketed by url_hash range and EACH RANGE'S FILTER LIVES WHERE
-    * THAT RANGE'S PROBES RUN — a task probes exactly one resident filter,
-    * no node ever needs the full set. Capacity scales linearly with R at
-    * constant per-filter size and fpp (10^10 URLs / 4096 ranges ≈ 2.4M
-    * per filter ≈ 3 MB at 1%), and accumulator merge traffic stays small
-    * because allocation is lazy per range: a task tapping a
-    * hash-clustered slice of the delta only materializes the few ranges
-    * it actually touched. In this one-JVM sandbox the ranges are
-    * exercised via broadcast of the whole array (16 ranges in tests);
-    * the partitioning, routing, lazy allocation, and per-range sizing
-    * are the real thing. */
+    * url_hash range `pmod(h, R) == r` (replaces the single-filter
+    * auto-disable caveat). Capacity scales linearly with R at constant
+    * per-filter size and fpp (10^10 URLs / 4096 ranges ≈ 2.4M per filter
+    * ≈ 3 MB at 1%), and accumulator merge traffic stays small because
+    * allocation is lazy per range: a task tapping a hash-clustered slice
+    * of the delta only materializes the few ranges it actually touched.
+    *
+    * What runs today: [[filterNewWithPartitionedBloom]] BROADCASTS the
+    * whole array, so every task holds every range's filter, and the seen
+    * table is not bucketed or co-partitioned by url_hash range. Placing
+    * each range's filter where that range's probes run — the seen table
+    * bucketed by the same range key, a task probing one resident filter
+    * — is design-scale work that has not been built. */
   final class PartitionedBloom(val ranges: Int, val filters: Array[BloomFilter])
       extends Serializable {
     def rangeOf(h: Long): Int = (((h % ranges) + ranges) % ranges).toInt

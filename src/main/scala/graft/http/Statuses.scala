@@ -1,7 +1,6 @@
 package graft.http
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** HTTP status classification, including the engine-internal 6xx codes.
   *
@@ -87,29 +86,11 @@ object Statuses {
 
   // ---- Column forms: codegen-friendly, no UDF, usable in pure SQL. ----
 
-  def validCol(status: Column): Column =
-    status.isNotNull && status >= 200 && status < 400
-
   def invalidCol(status: Column): Column =
     status.isNull ||
       (!status.isin(Unknown, UserAgent, TooManyRequests, CodeServerError,
         CodeServerTooManyRequests) && (status < 200 || status >= 400))
 
-  def uncertainCol(status: Column): Column =
-    status.isin(UserAgent, CodeServerError, CodeException, TooManyRequests,
-      CodeServerTooManyRequests)
-
   def retryCol(status: Column): Column =
     status.isin(TooManyRequests, CodeServerTooManyRequests)
-
-  def redirectCol(status: Column): Column =
-    (status > 300 && status < 400) || status === UserAgent
-
-  /** Page-rating component from status (handlerhttppage.py:216-227):
-    * 200→10, other 2xx→5, 3xx→1, else 0. */
-  def ratingCol(status: Column): Column =
-    when(status === Ok, 10)
-      .when(status >= 200 && status < 300, 5)
-      .when(status >= 300 && status < 400, 1)
-      .otherwise(0)
 }

@@ -6,14 +6,18 @@ import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
+  * Three paths, one output schema:
   *   - brute-force cosine top-k (the exactness baseline): broadcast the
-  *     (small) query set, score every row, per-query window top-k;
+  *     (small) query set, score every row;
+  *   - sign-sketch: a Hamming-radius prefilter over a per-row sketch,
+  *     exact cosine on the in-radius rows only — the default scale path;
   *   - IVF: one cheap pass assigns rows to coarse centroids; queries probe
   *     only the nearest `nProbe` cells, cutting the scored fraction to
-  *     ~nProbe/nCells — the 100 TB path, same output schema.
-  * Scores are rounded before ranking so rankings are reproducible across
-  * engines and summation orders.
+  *     ~nProbe/nCells.
+  * Each picks its candidate (query, row) pairs and hands them to one
+  * per-query ranked top-k, [[rankedTopK]]. Scores are rounded before
+  * ranking so rankings are reproducible across engines and summation
+  * orders.
   */
 object Ann {
 
@@ -47,12 +51,20 @@ object Ann {
       vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineUdf(col("qvec"), col("cvec")))
+    rankedTopK(c.crossJoin(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
+  }
+
+  /** The per-query ranked top-k every path ends in: `candidates`
+    * (query_id, neighbor_id, qvec, cvec) scored by [[cosineUdf]], ranked
+    * by cosine descending with a deterministic tiebreak on neighbor id,
+    * and cut at `k` → (query_id, neighbor_id, rank, cosine). */
+  private def rankedTopK(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+    candidates
+      .withColumn("cosine", cosineUdf(col("qvec"), col("cvec")))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
@@ -168,16 +180,10 @@ object Ann {
               s"(sketchBits=$sketchBits), got "), size(col("csk"))))))
       .filter(col("hamming") <= threshold)
       .select("query_id", "neighbor_id")
-    val scored = inRadius
+    rankedTopK(inRadius
       .join(corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cvec")), Seq("neighbor_id"))
-      .join(broadcast(q.select("query_id", "qvec")), Seq("query_id"))
-      .withColumn("cosine", cosineUdf(col("qvec"), col("cvec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+      .join(broadcast(q.select("query_id", "qvec")), Seq("query_id")), k)
   }
 
   /** IVF top-k: rows scored only in the query's `nProbe` nearest cells.
@@ -202,13 +208,7 @@ object Ann {
       .withColumn("cell", cellOf(col("cvec")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
       .withColumn("cell", explode(probeCells(col("qvec"))))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineUdf(col("qvec"), col("cvec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankedTopK(c.join(broadcast(q), Seq("cell"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 }

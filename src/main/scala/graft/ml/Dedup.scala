@@ -1,13 +1,16 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Distributed near-duplicate detection: MinHash+LSH, SimHash, n-gram
-  * Jaccard. The shapes are the standard web-scale ones: sketch per row in
-  * one map pass (no shuffle), band-bucket join for candidates (shuffle only
-  * the tiny sketches, never the text), exact verify on the candidate pairs
-  * only.
+  * Jaccard, embedding cosine. Every join is filter-and-verify: sketch per
+  * row in one map pass (no shuffle), block the sketches into candidate
+  * pairs (shuffle only the tiny sketches, never the text), exact verify on
+  * the candidate pairs only. The sketch joins block through one capped
+  * self-join, [[blockedPairs]], and the score-UDF joins verify through one
+  * join-back, [[verifiedPairs]].
   */
 object Dedup {
 
@@ -155,24 +158,58 @@ object Dedup {
 
   /** Convenience registry: the [[BucketStats]] of the most recent call of
     * `op` ("minhash-lsh" | "simhash" | "embed-neardup"). Single-query
-    * monitoring only — concurrent same-op queries should use the
-    * `*Observed` variants, whose returned handle is theirs alone. */
+    * monitoring only — concurrent SimHash queries should use
+    * [[simhashNearDupPairsObserved]], whose returned handle is theirs
+    * alone. */
   def droppedBuckets(op: String): Option[(Long, Long)] =
     Option(lastBucketStats.get(op)).flatMap(_.get)
 
-  /** MinHash-LSH candidate pairs: df(idCol, textCol) → (id_a, id_b) with
-    * id_a < id_b. Only sketches shuffle; pairs come from a self-join on
-    * the band key (AQE can skew-split it), never from per-bucket row
-    * materialization. EAGER — see [[materializeAndRelease]]: the work
-    * runs at call time and only the id-pair result stays persisted. */
-  def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      bands: Int = 16, maxBucket: Int = 1000): DataFrame =
-    lshCandidatePairsObserved(df, idCol, textCol, bands, maxBucket)._1
+  /** The filter half of filter-and-verify (Distributed Streaming Set
+    * Similarity Join, ICDE 2020): `keyed` (id, `key`, carry…) self-joined
+    * on the keys [[survivingBuckets]] keeps, id_a < id_b — one row per
+    * shared bucket, with `c`_a and `c`_b for each carried column `c`.
+    * Returns the pairs, the surviving-key checkpoint (to release) and the
+    * call's [[BucketStats]]. AQE can skew-split the self-join. */
+  private def blockedPairs(keyed: DataFrame, key: String, maxBucket: Int,
+      op: String, carry: String*): (DataFrame, DataFrame, BucketStats) = {
+    val (ok, stats) = survivingBuckets(keyed, key, maxBucket, op)
+    val capped = keyed.join(ok, Seq(key))
+    def side(s: String) = capped.select(col(key) +: col("id").as(s"id_$s") +:
+      carry.map(c => col(c).as(s"${c}_$s")): _*)
+    val pairs = side("a").join(side("b"), Seq(key))
+      .filter(col("id_a") < col("id_b"))
+    (pairs, ok, stats)
+  }
 
-  /** [[lshCandidatePairs]] plus this call's own dropped-bucket handle. */
-  def lshCandidatePairsObserved(df: DataFrame, idCol: String,
-      textCol: String, bands: Int = 16,
-      maxBucket: Int = 1000): (DataFrame, BucketStats) = {
+  /** The verify half: `candidates` (id_a, id_b) join `features` (id,
+    * `feature`) on both ids, `score` runs on the two feature values, and
+    * the pairs scoring at least `threshold` stay as (id_a, id_b,
+    * `scoreCol`). Only candidate rows ever meet the feature column. */
+  private def verifiedPairs(candidates: DataFrame, features: DataFrame,
+      feature: String, score: UserDefinedFunction, scoreCol: String,
+      threshold: Double): DataFrame = {
+    def side(s: String) =
+      features.select(col("id").as(s"id_$s"), col(feature).as(s"${feature}_$s"))
+    candidates
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .withColumn(scoreCol, score(col(s"${feature}_a"), col(s"${feature}_b")))
+      .filter(col(scoreCol) >= threshold)
+      .select("id_a", "id_b", scoreCol)
+  }
+
+  /** [[TextKit.jaccardSortedAtLeast]] of two sorted hash arrays: the exact
+    * score when it is at least `threshold`, -1 (early exit) when not. */
+  private def jaccardAtLeastUdf(threshold: Double) =
+    udf((a: Array[Long], b: Array[Long]) =>
+      TextKit.jaccardSortedAtLeast(a, b, threshold))
+
+  /** MinHash-LSH candidate pairs: df(idCol, textCol) → (id_a, id_b) with
+    * id_a < id_b, blocked on the signature's band hashes. Only sketches
+    * shuffle. EAGER — see [[materializeAndRelease]]: the work runs at
+    * call time and only the id-pair result stays persisted. */
+  private def lshCandidatePairs(df: DataFrame, idCol: String,
+      textCol: String, bands: Int): DataFrame = {
     // the (id, band) sketch table is materialized ONCE: it feeds the
     // bucket aggregation AND both sides of the candidate self-join, and
     // Spark shares no subtrees across DataFrame references — without the
@@ -185,15 +222,10 @@ object Dedup {
       .withColumn("band", explode(bandHashesUdf(col("sig"), lit(bands))))
       .select("id", "band")
       .localCheckpoint(true)
-    val (ok, stats) = survivingBuckets(withBand, "band", maxBucket,
+    val (blocked, ok, _) = blockedPairs(withBand, "band", maxBucket = 1000,
       "minhash-lsh")
-    val capped = withBand.join(ok, Seq("band"))
-    val pairs = capped.select(col("band"), col("id").as("id_a"))
-      .join(capped.select(col("band"), col("id").as("id_b")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    (materializeAndRelease(pairs, withBand, ok), stats)
+    val pairs = blocked.select("id_a", "id_b").distinct()
+    materializeAndRelease(pairs, withBand, ok)
   }
 
   /** Candidates verified by exact shingle Jaccard ≥ threshold. The text
@@ -213,20 +245,8 @@ object Dedup {
     })
     val shingles = df.select(col(idCol).as("id"),
       shingleUdf(col(textCol)).as("sh"))
-    val candidates = lshCandidatePairs(df, idCol, textCol, bands)
-    // exact score for every surviving row, early merge exit (-1) for
-    // candidates provably below threshold — the >= threshold filter
-    // keeps identical rows and scores (see jaccardSortedAtLeast)
-    val jacUdf = udf((a: Array[Long], b: Array[Long]) =>
-      TextKit.jaccardSortedAtLeast(a, b, threshold))
-    candidates
-      .join(shingles.select(col("id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(shingles.select(col("id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
-      .withColumn("jaccard", jacUdf(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifiedPairs(lshCandidatePairs(df, idCol, textCol, bands), shingles,
+      "sh", jaccardAtLeastUdf(threshold), "jaccard", threshold)
   }
 
   // ------------------------------------------------------------ SimHash
@@ -277,15 +297,10 @@ object Dedup {
       .withColumn("chunk", explode(chunksUdf(col("simhash"))))
       .select("id", "simhash", "chunk")
       .localCheckpoint(true)
-    val (ok, stats) = survivingBuckets(chunked, "chunk", maxBucket,
-      "simhash")
-    val capped = chunked.join(ok, Seq("chunk"))
-    val pairs = capped.select(col("chunk"), col("id").as("id_a"),
-        col("simhash").as("sh_a"))
-      .join(capped.select(col("chunk"), col("id").as("id_b"),
-        col("simhash").as("sh_b")), Seq("chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+    val (blocked, ok, stats) = blockedPairs(chunked, "chunk", maxBucket,
+      "simhash", "simhash")
+    val pairs = blocked
+      .withColumn("hamming", expr("bit_count(simhash_a ^ simhash_b)"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
       .distinct()
@@ -488,19 +503,11 @@ object Dedup {
       .withColumn("chunk", explode(chunksUdf(col("sketch"))))
       .select("id", "chunk")
       .localCheckpoint(true)
-    val (ok, _) = survivingBuckets(chunked, "chunk", maxBucket,
+    val (blocked, ok, _) = blockedPairs(chunked, "chunk", maxBucket,
       "embed-neardup")
-    val capped = chunked.join(ok, Seq("chunk"))
-    val candidates = capped.select(col("chunk"), col("id").as("id_a"))
-      .join(capped.select(col("chunk"), col("id").as("id_b")), Seq("chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val pairs = candidates
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cosine", cosineUdf(col("v_a"), col("v_b")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b")
+    val candidates = blocked.select("id_a", "id_b").distinct()
+    val pairs = verifiedPairs(candidates, vecs, "v", cosineUdf, "cosine",
+      threshold).select("id_a", "id_b")
     materializeAndRelease(pairs, chunked, ok)
   }
 
@@ -531,15 +538,6 @@ object Dedup {
       val a = TextKit.charNgramHashes(t, n)
       java.util.Arrays.sort(a); a
     })
-    // Array[Long] args: bulk primitive-array deserialization, no per-
-    // element boxing — this UDF runs once per candidate pair and the
-    // candidate set tracks corpus density (can approach all-pairs on a
-    // dense near-dup corpus), so the boundary cost is the hot path.
-    // jaccardSortedAtLeast: exact score when >= threshold, -1 with an
-    // early merge exit when provably below — identical rows survive the
-    // >= threshold filter (see its Scaladoc for the boundary argument)
-    val jacUdf = udf((a: Array[Long], b: Array[Long]) =>
-      TextKit.jaccardSortedAtLeast(a, b, threshold))
     // (id, sorted grams) is referenced five times (frequency pass,
     // prefix pass, the no-gram branch, both verify sides) and Spark
     // shares no subtrees across references — materialize the
@@ -613,11 +611,8 @@ object Dedup {
         col("rn_a") <= col("glen_a") - alpha + 1 &&
         col("rn_b") <= col("glen_b") - alpha + 1)
       .select("id_a", "id_b").distinct()
-    val pairs = candidates
-      .join(docs.select(col("id").as("id_a"), col("g").as("g_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("g").as("g_b")), Seq("id_b"))
-      .withColumn("jaccard", jacUdf(col("g_a"), col("g_b")))
-      .filter(col("jaccard") >= threshold)
+    val pairs = verifiedPairs(candidates, docs, "g",
+      jaccardAtLeastUdf(threshold), "jaccard", threshold)
       .select("id_a", "id_b")
     // the gram table (~one long per character per doc) and the prefix
     // index are the big checkpoints here — released as soon as the

@@ -1,7 +1,6 @@
 package graft.robots
 
 import scala.collection.mutable
-import graft.url.UrlKit
 
 /** robots.txt evaluation with CPython `urllib.robotparser` semantics —
   * the gate applied before every fetch
@@ -145,6 +144,4 @@ object Robots {
         if (wh2 >= 0) Some(line.substring(wh2 + 1).trim) else None
       }.distinct
   }
-
-  def robotsUrlFor(url: String): Option[String] = UrlKit.robotsTxtUrl(url)
 }

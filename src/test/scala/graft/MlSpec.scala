@@ -387,18 +387,27 @@ class MlSpec extends AnyFunSuite {
 
   test("dropped degenerate buckets surface as observed metrics") {
     import spark.implicits._
-    // 40 identical docs collide into every simhash chunk bucket; with
+    // 40 identical rows collide into every chunk bucket; with
     // maxBucket=10 all 4 chunk buckets drop, and the accounting must ride
-    // the main query (no extra action) and be readable afterwards
+    // the main query (no extra action) and be readable afterwards under
+    // the op name perfbench sums
     val docs = ((0 until 40).map(i => (i.toLong, docA)) ++
       Seq((100L, docC))).toDF("doc_id", "text")
-    val pairs = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
-      maxBucket = 10)
-    assert(pairs.count() == 0) // all candidate buckets were degenerate
-    val stats = Dedup.droppedBuckets("simhash")
-    assert(stats.nonEmpty, "bucket metrics did not ride the query")
-    assert(stats.get._1 >= 4L, s"expected >=4 dropped buckets: $stats")
-    assert(stats.get._2 == 40L, s"largest dropped should be 40: $stats")
+    // the odd vector is the negation, so its sign sketch is the exact
+    // complement and shares no chunk bucket with the 40
+    val vecs = ((0 until 40).map(i => (i.toLong, Array.fill(16)(1.0))) ++
+      Seq((100L, Array.fill(16)(-1.0)))).toDF("vec_id", "embedding")
+    for ((op, pairs) <- Seq(
+        "simhash" -> Dedup.simhashNearDupPairs(docs, "doc_id", "text",
+          maxBucket = 10),
+        "embed-neardup" -> Dedup.embeddingNearDupPairs(vecs, "vec_id",
+          "embedding", threshold = 0.9, maxBucket = 10))) {
+      assert(pairs.count() == 0, op) // all candidate buckets were degenerate
+      val stats = Dedup.droppedBuckets(op)
+      assert(stats.nonEmpty, s"$op: bucket metrics did not ride the query")
+      assert(stats.get._1 >= 4L, s"$op: expected >=4 dropped buckets: $stats")
+      assert(stats.get._2 == 40L, s"$op: largest dropped should be 40: $stats")
+    }
   }
 
   test("per-call bucket handles: a later same-op call cannot clobber") {
