@@ -54,8 +54,10 @@ final case class CrawlConfig(
     perHostBudget: Int = 100,
     /** per-host minimum gap between fetches, in seconds (J-3; reference
       * delay_s, request.py:31). Above 0, every URL of a host is fetched
-      * in one partition, in sequence, so the gap holds across the batch;
-      * at 0 a hot host's URLs spread over `saltBuckets` partitions. */
+      * in one partition, one request at a time, so the gap holds across
+      * the batch; at 0 a hot host's URLs spread over all fetch partitions
+      * and each partition keeps `CrawlLoop.FetchWindow` requests in
+      * flight. */
     delayS: Int = 0,
     fetchPartitions: Int = 0, // 0 → spark.sql.shuffle.partitions
     useBloom: Boolean = true,
@@ -120,9 +122,11 @@ final case class CrawlConfig(
     * (baseurl.py:221-223). */
   def userAgent: String = FetchRequest.UserAgent
 
-  /** partitions one host's URLs spread over for fetch when `delayS` is 0
-    * (`host_hash_salted`); the dequeue still treats the host as one
-    * budget unit. */
+  /** salt count of the frontier's `host_hash_salted` column, which
+    * `Frontier.admit` still writes so stores stay readable across
+    * versions. The fetch exchange no longer reads it: with `delayS` 0 a
+    * host's salt is `pmod(url_hash, P)` over the P fetch partitions, so
+    * the salt count there is P (see the fetch stage in `runInternal`). */
   def saltBuckets: Int = 4
 }
 
@@ -499,16 +503,22 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val toFetch = gated.filter(col("allowed"))
 
         // ---- host-partitioned, deterministically ordered fetch+parse ----
-        // the per-host gap holds only where one partition fetches all of a
-        // host's URLs in sequence; without a gap, the salted key spreads a
-        // hot host over saltBuckets partitions
+        // the partition id is computed, not hashed again: with a per-host
+        // gap, pmod(host_hash, P), so one partition fetches all of a
+        // host's URLs in sequence; without one, the host's partition plus
+        // the salt pmod(url_hash, P), so a hot host spreads over all P
+        // fetch partitions. The inner pmods keep the sum from overflowing.
         val internetL = internet
         val cfg = config
-        val hostKey = if (config.delayS > 0) "host_hash" else "host_hash_salted"
+        val parts = lit(fetchParts)
+        val hostPart = pmod(col("host_hash"), parts)
+        val partitionId =
+          if (config.delayS > 0) hostPart
+          else pmod(hostPart + pmod(col("url_hash"), parts), parts)
         val fetched: Dataset[FetchedPage] =
           toFetch
-            .select("url", "url_hash", "host", hostKey, "seq")
-            .repartition(fetchParts, col(hostKey))
+            .select("url", "url_hash", "host", "host_hash", "seq")
+            .repartitionById(fetchParts, partitionId.cast("int"))
             .sortWithinPartitions("host", "seq")
             .as[(String, Long, String, Long, Long)]
             .mapPartitions { it =>
@@ -713,17 +723,43 @@ object CrawlLoop {
     * derives from the batch number and a crawl replays exactly */
   val StartTime: Instant = Instant.parse("2024-01-01T00:00:00Z")
 
-  /** Fused fetch + parse for one partition. Pure w.r.t. its inputs — the
-    * only nondeterminism (crawl_time_ms) never feeds back into state. */
+  /** Requests one fetch partition keeps in flight ahead of the page it
+    * parses, when no per-host gap is set (4 and 8 measured alike on the
+    * `crawl_wide` benchmark). */
+  val FetchWindow = 4
+
+  /** Fused fetch + parse for one partition, in input order. Up to
+    * `FetchWindow` requests run on the fetch client's pool while this
+    * thread parses, so charset sniffing, recognition and link extraction
+    * stay on the task thread; with `delayS > 0` the window is 1, and a
+    * host's next request waits out the gap after the previous one
+    * returned. Requests still in flight when the task ends are cancelled.
+    * `request` builds a URL's request (its deadline, say). Pure w.r.t. its
+    * inputs — the only nondeterminism (crawl_time_ms) never feeds back
+    * into state. */
   def fetchAndParse(it: Iterator[(String, Long, String, Long, Long)],
-      internet: SyntheticInternet, config: CrawlConfig): Iterator[FetchedPage] = {
+      internet: SyntheticInternet, config: CrawlConfig,
+      request: String => FetchRequest = FetchRequest.default)
+      : Iterator[FetchedPage] = {
+    val window = if (config.delayS > 0) 1 else FetchWindow
     val lastFetchNanos = scala.collection.mutable.Map[String, Long]()
-    it.map { case (url, urlHash, host, _, seq) =>
-      val req = FetchRequest.default(url).copy(delayS = config.delayS)
+    final case class InFlight(url: String, urlHash: Long, host: String,
+        seq: Long, dispatched: Option[Handlers.HandlerResult],
+        main: FetchClient.Started, social: Option[(String, FetchClient.Started)])
+    val inFlight = mutable.Queue[InFlight]()
+    Option(org.apache.spark.TaskContext.get()).foreach(
+      _.addTaskCompletionListener[Unit] { _ =>
+        inFlight.foreach { f =>
+          f.main.cancel()
+          f.social.foreach(_._2.cancel())
+        }
+      })
+
+    def begin(url: String, urlHash: Long, host: String, seq: Long): InFlight = {
+      val req = request(url).copy(delayS = config.delayS)
       // handler dispatch may rewrite the URL before fetch (baseurl.py:305)
       val dispatched = Handlers.dispatch(req.url)
       val fetchUrl = dispatched.map(_.url).getOrElse(req.url)
-      val handlerFeeds = dispatched.map(_.feeds).getOrElse(Seq.empty)
       // per-host min-gap politeness (J-3; reference delay_s, request.py:31)
       if (req.delayS > 0) {
         lastFetchNanos.get(host).foreach { last =>
@@ -732,77 +768,100 @@ object CrawlLoop {
           if (waitMs > 0) Thread.sleep(waitMs)
         }
       }
-      val resp = FetchClient.fetchOne(req.copy(url = fetchUrl), internet)
-      if (req.delayS > 0) lastFetchNanos(host) = System.nanoTime()
-
       // social-API side-fetch in the same partition (J-5; the reference
       // fan-outs these on a thread pool, defaulturlhandler.py:183-207 —
-      // here they are just one more sequential request on the same host
-      // budget slot)
-      val social: Social.SocialData =
-        dispatched.flatMap(_.socialApiUrl) match {
-          case Some(api) =>
-            val sresp = FetchClient.fetchOne(req.copy(url = api), internet)
+      // here it is one more request on the same host budget slot, started
+      // with the page's own)
+      InFlight(url, urlHash, host, seq, dispatched,
+        FetchClient.start(req.copy(url = fetchUrl), internet),
+        dispatched.flatMap(_.socialApiUrl).map(api =>
+          (api, FetchClient.start(req.copy(url = api), internet))))
+    }
+    def fill(): Unit =
+      while (inFlight.size < window && it.hasNext) {
+        val (url, urlHash, host, _, seq) = it.next()
+        inFlight.enqueue(begin(url, urlHash, host, seq))
+      }
+
+    new Iterator[FetchedPage] {
+      def hasNext: Boolean = { fill(); inFlight.nonEmpty }
+      def next(): FetchedPage = {
+        fill()
+        val f = inFlight.dequeue()
+        val resp = FetchClient.finish(f.main, hashBody = false)
+        if (config.delayS > 0) lastFetchNanos(f.host) = System.nanoTime()
+        val social: Social.SocialData = f.social match {
+          case Some((api, started)) =>
+            val sresp = FetchClient.finish(started, hashBody = false)
             if (Statuses.isValid(sresp.status))
-              Social.forHandler(dispatched.get.name, api,
+              Social.forHandler(f.dispatched.get.name, api,
                 sresp.text.getOrElse(""))
             else Social.SocialData()
           case None => Social.SocialData()
         }
-
-      val isImage = ContentTypes.isImage(resp.headers)
-      val parsed =
-        if (Statuses.isValid(resp.status) && !isImage)
-          PageFactory.recognize(resp.url, resp.headers, resp.text)
-        else None
-      val meta = PageFactory.toPageMeta(resp.url, parsed)
-      val entryLinks: Seq[String] = parsed match {
-        case Some(PageFactory.ParsedRss(m)) =>
-          m.entries(StartTime).map(_.link)
-        case Some(PageFactory.ParsedOpml(entries, _)) => entries.map(_.url)
-        case _ => Seq.empty
+        fill() // the next requests run while this page is parsed
+        parsePage(f.url, f.urlHash, f.host, f.seq, resp, social,
+          f.dispatched.map(_.feeds).getOrElse(Seq.empty))
       }
-      // sitemap XML carries no recognized page type; the reference link-
-      // scans it like any content (domaincache.py:130-167). Lazy: only a
-      // page that is not parsed HTML pays for the two full-text scans.
-      lazy val isSitemap = resp.text.exists(t =>
-        t.contains("<urlset") || t.contains("<sitemapindex"))
-      val links: Seq[String] = parsed match {
-        case Some(PageFactory.ParsedHtml(m)) =>
-          LinkExtractor.extractLinksSorted(resp.url, m.contents).toSeq
-        case _ if isSitemap && Statuses.isValid(resp.status) =>
-          LinkExtractor.extractLinksSorted(resp.url, resp.text.get).toSeq
-        case _ => Seq.empty
-      }
-      FetchedPage(
-        url = url,
-        final_url = resp.url,
-        url_hash = urlHash,
-        host = host,
-        seq = seq,
-        status = resp.status,
-        content_type = resp.recognizedContentType.getOrElse(""),
-        crawl_time_ms = resp.crawlTimeMs,
-        page_type = meta.pageType,
-        title = meta.title.orNull,
-        description = meta.description.orNull,
-        language = meta.language.orNull,
-        date_published = meta.datePublished.orNull,
-        page_rating = meta.pageRating,
-        links = links,
-        feeds = meta.feeds ++ handlerFeeds,
-        entry_links = entryLinks,
-        is_image = isImage,
-        image_bytes = if (isImage) resp.body else Array.empty[Byte],
-        body_hash_hex = meta.bodyHashHex.orNull,
-        errors = resp.errors,
-        social_thumbs_up = social.thumbsUp,
-        social_thumbs_down = social.thumbsDown,
-        social_view_count = social.viewCount,
-        social_upvote_ratio = social.derivedUpvoteRatio,
-        social_rating = social.rating,
-        social_followers = social.followersCount,
-        social_upvote_diff = social.derivedUpvoteDiff)
     }
+  }
+
+  /** Parse one fetched page into its `FetchedPage` row. */
+  private def parsePage(url: String, urlHash: Long, host: String, seq: Long,
+      resp: graft.model.FetchResponse, social: Social.SocialData,
+      handlerFeeds: Seq[String]): FetchedPage = {
+    val isImage = ContentTypes.isImage(resp.headers)
+    val parsed =
+      if (Statuses.isValid(resp.status) && !isImage)
+        PageFactory.recognize(resp.url, resp.headers, resp.text)
+      else None
+    val meta = PageFactory.toPageMeta(resp.url, parsed)
+    val entryLinks: Seq[String] = parsed match {
+      case Some(PageFactory.ParsedRss(m)) =>
+        m.entries(StartTime).map(_.link)
+      case Some(PageFactory.ParsedOpml(entries, _)) => entries.map(_.url)
+      case _ => Seq.empty
+    }
+    // sitemap XML carries no recognized page type; the reference link-
+    // scans it like any content (domaincache.py:130-167). Lazy: only a
+    // page that is not parsed HTML pays for the two full-text scans.
+    lazy val isSitemap = resp.text.exists(t =>
+      t.contains("<urlset") || t.contains("<sitemapindex"))
+    val links: Seq[String] = parsed match {
+      case Some(PageFactory.ParsedHtml(m)) =>
+        LinkExtractor.extractLinksSorted(resp.url, m.contents).toSeq
+      case _ if isSitemap && Statuses.isValid(resp.status) =>
+        LinkExtractor.extractLinksSorted(resp.url, resp.text.get).toSeq
+      case _ => Seq.empty
+    }
+    FetchedPage(
+      url = url,
+      final_url = resp.url,
+      url_hash = urlHash,
+      host = host,
+      seq = seq,
+      status = resp.status,
+      content_type = resp.recognizedContentType.getOrElse(""),
+      crawl_time_ms = resp.crawlTimeMs,
+      page_type = meta.pageType,
+      title = meta.title.orNull,
+      description = meta.description.orNull,
+      language = meta.language.orNull,
+      date_published = meta.datePublished.orNull,
+      page_rating = meta.pageRating,
+      links = links,
+      feeds = meta.feeds ++ handlerFeeds,
+      entry_links = entryLinks,
+      is_image = isImage,
+      image_bytes = if (isImage) resp.body else Array.empty[Byte],
+      body_hash_hex = meta.bodyHashHex.orNull,
+      errors = resp.errors,
+      social_thumbs_up = social.thumbsUp,
+      social_thumbs_down = social.thumbsDown,
+      social_view_count = social.viewCount,
+      social_upvote_ratio = social.derivedUpvoteRatio,
+      social_rating = social.rating,
+      social_followers = social.followersCount,
+      social_upvote_diff = social.derivedUpvoteDiff)
   }
 }

@@ -9,10 +9,12 @@ import graft.parse.{Hashing, PageValidity}
 
 /** The per-request fetch client — S1-S5 of the operator inventory.
   *
-  * Called inside `mapPartitions`; the per-host minimum gap (the
+  * Called inside `mapPartitions`. A request is `start`ed on the watchdog
+  * pool and `finish`ed later, so a partition can keep several in flight;
+  * `fetchOne` is the two back to back. The per-host minimum gap (the
   * reference's `delay_s`, webtoolkit/request.py:31) is kept by the
   * caller, `CrawlLoop.fetchAndParse`, which fetches one host's requests
-  * in one partition, in sequence, when the gap is set (J-3). Guards are
+  * in one partition, one at a time, when the gap is set (J-3). Guards are
   * header-first like the reference (webtoolkit/crawlers/
   * requestscrawler.py:49-70): byte limit and accept types are checked
   * before the body is materialized.
@@ -41,7 +43,9 @@ object FetchClient {
     * stuck reads (webtoolkit/crawlers/crawlerinterface.py:280-307). A cached
     * daemon pool gives the same semantics without a fresh thread per URL:
     * a timed-out task is cancelled with interrupt; if it is truly stuck the
-    * pool just grows by one abandoned thread, exactly like the reference. */
+    * pool just grows by one abandoned thread, exactly like the reference.
+    * The pool is also what lets a caller keep several requests in flight:
+    * `start` submits, `finish` collects. */
   private lazy val watchdogPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-fetch-watchdog")
@@ -54,38 +58,26 @@ object FetchClient {
     * synthetic internet has none, so a small fixed slack suffices. */
   private val watchdogSlackMs = 200L
 
-  /** Outcome of a deadline-guarded fetch: the reference distinguishes a
-    * killed worker thread (604 timeout) from an exception raised inside the
-    * fetch (600 exception, statuses.py:42-49) — so must we. */
-  private[fetch] sealed trait DeadlineResult[+T]
-  private[fetch] final case class DeadlineOk[T](value: T) extends DeadlineResult[T]
-  private[fetch] case object DeadlineTimeout extends DeadlineResult[Nothing]
-  private[fetch] final case class DeadlineFailed(message: String)
-      extends DeadlineResult[Nothing]
-
-  /** Run `body` under a deadline of `timeoutS` seconds (+slack). */
-  private[fetch] def withDeadline[T](timeoutS: Int)(
-      body: => T): DeadlineResult[T] = {
-    if (timeoutS <= 0)
-      return try DeadlineOk(body) catch {
-        case e: Exception => DeadlineFailed(describe(e))
-      }
-    val fut = watchdogPool.submit(new java.util.concurrent.Callable[T] {
-      override def call(): T = body
-    })
-    try DeadlineOk(fut.get(timeoutS * 1000L + watchdogSlackMs,
-      java.util.concurrent.TimeUnit.MILLISECONDS))
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        fut.cancel(true) // interrupt; abandon if uninterruptible
-        DeadlineTimeout
-      case e: java.util.concurrent.ExecutionException =>
-        DeadlineFailed(describe(if (e.getCause != null) e.getCause else e))
-    }
-  }
-
   private def describe(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
+
+  /** What the pooled raw fetch returns: the last response of the redirect
+    * chain, its URL, and when the call returned, on the deadline clock
+    * (`System.nanoTime`) and on the caller's `nowNanos` clock. */
+  private[fetch] final case class RawFetch(resp: SyntheticResponse,
+      finalUrl: String, doneNanos: Long, doneClock: Long)
+
+  /** A request `start` set running; `finish` collects it. `deadline` is
+    * on the `System.nanoTime` clock, `t0` on the caller's `clock`. */
+  final class Started private[fetch] (
+      private[fetch] val req: FetchRequest,
+      private[fetch] val clock: () => Long,
+      private[fetch] val t0: Long,
+      private[fetch] val deadline: Long,
+      private[fetch] val raw: java.util.concurrent.Future[RawFetch]) {
+    /** Interrupt the fetch if it still runs (its caller has gone away). */
+    def cancel(): Unit = raw.cancel(true)
+  }
 
   /** Redirect statuses `requests` follows automatically (3xx with a
     * Location; the reference relies on requests' allow_redirects=True and
@@ -103,21 +95,18 @@ object FetchClient {
     else req
   }
 
-  /** One request against the synthetic internet, with the reference's
-    * guard order: status → byte limit → accept types → decode. Follows
-    * redirect chains; `url` is the final location, `requestUrl` the
-    * original (response.py:197-210). A fetch that exceeds `timeoutS` maps
-    * to the engine-internal 604 timeout status (statuses.py:42-49). */
-  def fetchOne(req0: FetchRequest, internet: SyntheticInternet,
-      nowNanos: () => Long = () => System.nanoTime()): FetchResponse = {
+  /** Start one request against the synthetic internet: the raw fetch,
+    * redirect chain included (the reference's deadline scope is the whole
+    * `requests.get` call), runs on the watchdog pool and records when it
+    * returned. With `timeoutS <= 0` there is no deadline and it runs here,
+    * before `start` returns. */
+  def start(req0: FetchRequest, internet: SyntheticInternet,
+      nowNanos: () => Long = () => System.nanoTime()): Started = {
     val req = updateRequestForServices(req0)
     val t0 = nowNanos()
-    val errors = mutable.ArrayBuffer[String]()
-
-    // fetch + redirect-follow under one total deadline (reference scope:
-    // the whole requests.get call, redirects included)
-    var finalUrl = req.url
-    val rawRes: DeadlineResult[SyntheticResponse] = withDeadline(req.timeoutS) {
+    val deadline = System.nanoTime() +
+      (req.timeoutS * 1000L + watchdogSlackMs) * 1000000L
+    val call: java.util.concurrent.Callable[RawFetch] = () => {
       var current = req.url
       var resp = internet.get(current)
       var hops = 0
@@ -128,30 +117,61 @@ object FetchClient {
         resp = internet.get(current)
         hops += 1
       }
-      finalUrl = current
-      resp
+      RawFetch(resp, current, System.nanoTime(), nowNanos())
     }
-    val raw = rawRes match {
-      case DeadlineOk(r) => r
-      case other =>
-        // 604 is reserved for the expired watchdog; an exception inside the
-        // fetch is 600 with its message, never masked as a timeout
-        val status = other match {
-          case DeadlineFailed(msg) =>
-            errors += s"Exception: $msg"
-            Statuses.CodeException
-          case _ =>
-            errors += s"Timeout: ${req.timeoutS}s exceeded"
-            Statuses.CodeTimeout
-        }
-        return FetchResponse(
-          url = req.url, requestUrl = req.url, status = status,
-          headers = Map.empty, body = Array.empty, text = None,
-          encoding = "utf-8", errors = errors.toSeq,
-          crawlTimeMs = (nowNanos() - t0) / 1000000L,
-        recognizedContentType = None, bodyHash = None)
-    }
+    val raw =
+      if (req.timeoutS <= 0) {
+        val task = new java.util.concurrent.FutureTask(call)
+        task.run()
+        task
+      } else watchdogPool.submit(call)
+    new Started(req, nowNanos, t0, deadline, raw)
+  }
 
+  /** Collect a started request. A fetch that is not done by its own start
+    * + `timeoutS` (+slack) maps to the engine-internal 604 timeout status
+    * (statuses.py:42-49) — also when it is collected later and returned in
+    * between, since the pooled call records when it returned. An exception
+    * inside the fetch is 600 with its message, never masked as a timeout.
+    * `hashBody = false` leaves `bodyHash` empty for a caller that never
+    * reads it. */
+  def finish(started: Started, hashBody: Boolean = true): FetchResponse = {
+    val req = started.req
+    def failed(status: Int, error: String) = FetchResponse(
+      url = req.url, requestUrl = req.url, status = status,
+      headers = Map.empty, body = Array.empty, text = None,
+      encoding = "utf-8", errors = Seq(error),
+      crawlTimeMs = (started.clock() - started.t0) / 1000000L,
+      recognizedContentType = None, bodyHash = None)
+    def timedOut = failed(Statuses.CodeTimeout,
+      s"Timeout: ${req.timeoutS}s exceeded")
+    try {
+      if (req.timeoutS <= 0) respond(started, started.raw.get(), hashBody)
+      else {
+        val raw = started.raw.get(
+          math.max(0L, started.deadline - System.nanoTime()),
+          java.util.concurrent.TimeUnit.NANOSECONDS)
+        if (raw.doneNanos - started.deadline > 0) timedOut
+        else respond(started, raw, hashBody)
+      }
+    } catch {
+      case _: java.util.concurrent.TimeoutException =>
+        started.cancel() // interrupt; abandon if uninterruptible
+        timedOut
+      case e: java.util.concurrent.ExecutionException =>
+        failed(Statuses.CodeException,
+          s"Exception: ${describe(if (e.getCause != null) e.getCause else e)}")
+    }
+  }
+
+  /** A returned raw fetch through the reference's guard order: status →
+    * byte limit → accept types → decode. `url` is the final location,
+    * `requestUrl` the original (response.py:197-210). */
+  private def respond(started: Started, fetched: RawFetch,
+      hashBody: Boolean): FetchResponse = {
+    val req = started.req
+    val raw = fetched.resp
+    val errors = mutable.ArrayBuffer[String]()
     var status = raw.status
     var body: Array[Byte] = raw.body
     var text: Option[String] = raw.text
@@ -204,7 +224,7 @@ object FetchClient {
     }
 
     FetchResponse(
-      url = finalUrl,
+      url = fetched.finalUrl,
       requestUrl = req.url,
       status = status,
       headers = raw.headers,
@@ -212,9 +232,15 @@ object FetchClient {
       text = decodedText,
       encoding = encoding,
       errors = errors.toSeq,
-      crawlTimeMs = (nowNanos() - t0) / 1000000L,
+      crawlTimeMs = (fetched.doneClock - started.t0) / 1000000L,
       recognizedContentType = recognized,
-      bodyHash = decodedText.flatMap(Hashing.md5)
-        .orElse(Hashing.md5Binary(body)))
+      bodyHash =
+        if (!hashBody) None
+        else decodedText.flatMap(Hashing.md5).orElse(Hashing.md5Binary(body)))
   }
+
+  /** One request, started and collected: `finish(start(req))`. */
+  def fetchOne(req: FetchRequest, internet: SyntheticInternet,
+      nowNanos: () => Long = () => System.nanoTime()): FetchResponse =
+    finish(start(req, internet, nowNanos))
 }

@@ -15,8 +15,10 @@ object Frontier {
   val cleanUdf = udf((url: String) => UrlKit.cleanedLink(url).orNull)
 
   /** Canonicalize + admission-filter raw links → frontier-shaped rows.
-    * `saltBuckets` spreads one hot host over N partitions; the dequeue
-    * below still treats the host as one budget unit. The per-link hot
+    * `host_hash_salted` salts a host over `saltBuckets` values; stores
+    * carry the column, but the crawl's fetch exchange computes its own
+    * partition id from `host_hash` and `url_hash`. The dequeue below
+    * treats a host as one budget unit. The per-link hot
     * path runs as native codegen expressions (graft.functions), not
     * ScalaUDFs — no encoder round-trip, stays in whole-stage codegen. */
   def admit(rawLinks: DataFrame, depth: Column, batchTime: Column,

@@ -259,16 +259,18 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("per-host delay holds across salt buckets: one host's fetches are serial") {
-    // six pages of one host whose salted keys split them 3/3 over two of
-    // the four fetch partitions; with a 1 s per-host gap the batch cannot
-    // finish before five gaps have passed, where two concurrent
-    // partitions would take two
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    // six pages of one host that the salted partition id (the one the
+    // fetch uses without a gap) splits over at least two of the four
+    // fetch partitions, none holding more than three; with a 1 s per-host
+    // gap the batch cannot finish before five gaps have passed, where
+    // concurrent partitions would take at most two
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     val seeds = (0 until 6).map(j => s"https://site-2.test/page/$j")
     val cfg = CrawlConfig(maxBatches = 1, delayS = 1, fetchPartitions = 4)
+    val p = lit(4)
     val perPartition = newLoop(cfg).seedFrontier(seeds)
-      .groupBy(pmod(hash(col("host_hash_salted")), lit(4))).count()
-      .collect().map(_.getLong(1))
+      .groupBy(pmod(pmod(col("host_hash"), p) + pmod(col("url_hash"), p), p))
+      .count().collect().map(_.getLong(1))
     assert(perPartition.length >= 2 && perPartition.max <= seeds.length / 2,
       s"salted split ${perPartition.mkString("/")}")
     newLoop(cfg.copy(delayS = 0)).run(seeds) // warm-up: same batch, no gap
@@ -278,6 +280,71 @@ class CrawlSpec extends AnyFunSuite {
     assert(result.crawlLog.count() == seeds.length)
     assert(wallS >= seeds.length - 1,
       f"$wallS%.2f s for ${seeds.length} pages of one host at a 1 s gap")
+  }
+
+  test("a hot host spreads over every fetch partition; the log does not move") {
+    // one host holds the whole frontier: 32 pages (robots excludes
+    // /page/7 of an even site), at least 4 per fetch partition
+    import org.apache.spark.sql.functions.spark_partition_id
+    val net = SyntheticInternet(SyntheticConfig(seed = 42L, nSites = 1,
+      pagesPerSite = 32))
+    val seeds = (0 until 32).map(j => s"https://site-0.test/page/$j")
+    def crawl(parts: Int) = new CrawlLoop(spark, net,
+      CrawlConfig(maxBatches = 1, fetchPartitions = parts)).run(seeds)
+    val spread = crawl(4)
+    val perPartition = spread.pages.groupBy(spark_partition_id()).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(spread.pages.count() >= 4 * 4)
+    assert(perPartition.keySet == (0 until 4).toSet,
+      s"one host's URLs per fetch partition: $perPartition")
+    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog.drop("crawl_time_ms")
+      .collect().map(_.toString).sorted.toSeq
+    assert(logRows(spread) == logRows(crawl(1)))
+  }
+
+  test("pipelined fetch (S3): each request keeps its own deadline") {
+    // one partition, several requests in flight: the stalled URL between
+    // fast pages times out on its own deadline, the pages around it come
+    // back in input order, and the whole partition takes about one
+    // deadline, not one per request
+    val slowNet = SyntheticInternet(SyntheticConfig(slowDelayMs = 3000L))
+    val oneSecond = (u: String) =>
+      graft.model.FetchRequest.default(u).copy(timeoutS = 1)
+    def partition(urls: Seq[String]): (Seq[(String, Int)], Double) = {
+      val rows = urls.zipWithIndex.map { case (u, i) =>
+        (u, i.toLong, "host", 0L, i.toLong) }
+      val pages = spark.sparkContext.parallelize(rows, 1)
+        .mapPartitions(it => CrawlLoop.fetchAndParse(it, slowNet,
+          CrawlConfig(), oneSecond))
+        .map(p => (p.url, p.status))
+      val t0 = System.nanoTime()
+      val out = pages.collect().toSeq
+      (out, (System.nanoTime() - t0) / 1e9)
+    }
+    assert(CrawlLoop.FetchWindow > 1)
+    val fast = (0 until 4).map(j => s"https://site-0.test/page/$j")
+    val urls = fast.take(2) ++ Seq("https://slow.test/") ++ fast.drop(2)
+    val (pages, wallS) = partition(urls)
+    assert(pages.map(_._1) == urls, "pages come out in input order")
+    assert(pages.map(_._2) == urls.map(u =>
+      if (u.startsWith("https://slow")) graft.http.Statuses.CodeTimeout
+      else 200))
+    assert(wallS < 2.5, f"$wallS%.2f s for one stalled request")
+    // the later stalled requests are reached only when the first one has
+    // timed out, past their own deadlines while they still run: 604 at
+    // once, not one deadline each
+    val slow = Seq("a", "b", "c").map(p => s"https://slow.test/$p")
+    val (stalled, stalledS) = partition(slow)
+    assert(stalled == slow.map(_ -> graft.http.Statuses.CodeTimeout))
+    assert(stalledS < 2.5, f"$stalledS%.2f s for three stalled requests")
+    // a request that returned after its deadline is a 604 even when it is
+    // collected later, once it has returned
+    val lateNet = SyntheticInternet(SyntheticConfig(slowDelayMs = 1500L))
+    val started = graft.fetch.FetchClient.start(
+      oneSecond("https://slow.test/"), lateNet)
+    Thread.sleep(2000)
+    assert(graft.fetch.FetchClient.finish(started).status ==
+      graft.http.Statuses.CodeTimeout)
   }
 
   test("per-host budget limits fetches per batch") {

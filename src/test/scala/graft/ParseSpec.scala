@@ -374,4 +374,64 @@ class ParseSpec extends AnyFunSuite {
     assert(ContentTypes.charset(
       Map("Content-Type" -> "text/html; charset=\"utf-8\"")).contains("utf-8"))
   }
+
+  /** The page-type scan as it was before the allocation-free search: it
+    * lower-cases the whole page, then looks the tags up. Kept here only
+    * as the oracle of the property below. */
+  private object LowerCasedValidity {
+    def html(lower: String): Int = {
+      val h = lower.indexOf("<html")
+      if (h >= 0 && (lower.contains("<body") || lower.contains("<meta"))) h
+      else -1
+    }
+    def rss(lower: String): Int =
+      if (lower.contains("<rss") && lower.contains("<channel"))
+        lower.indexOf("<rss")
+      else if (lower.contains("<feed") && lower.contains("<entry"))
+        lower.indexOf("<feed")
+      else if (lower.contains("<rdf") && lower.contains("<channel"))
+        lower.indexOf("<rdf")
+      else -1
+    def isContentsHtml(contents: String, locale: java.util.Locale): Boolean =
+      if (contents == null || contents.isEmpty) false
+      else {
+        val lower = contents.toLowerCase(locale)
+        val (h, r) = (html(lower), rss(lower))
+        if (h >= 0 && r >= 0) h < r else h >= 0
+      }
+  }
+
+  test("page-type tag search equals lower-casing the page, in any locale") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // tags in mixed case, next to the characters whose lower case is or
+    // contains an ASCII letter (U+0130 İ → i̇, U+212A Kelvin → k) and a
+    // letter whose upper case is ASCII (U+017F ſ → S)
+    val tags = Seq("html", "body", "meta", "rss", "channel", "feed",
+      "entry", "rdf", "link", "title")
+    val mixedCase: Gen[String] = for {
+      t <- Gen.oneOf(tags)
+      flips <- Gen.listOfN(t.length, Gen.oneOf(true, false))
+    } yield "<" + t.zip(flips).map { case (c, up) =>
+      if (up) c.toUpper else c }.mkString
+    val token: Gen[String] = Gen.frequency(
+      6 -> mixedCase,
+      1 -> Gen.oneOf("\u0130", "\u212A", "\u017F", "<", ">", " ", "x",
+        "<\u0130", "<h\u212Atml", "<r\u017Fs", "<\u017Fpan"))
+    val page: Gen[String] = Gen.listOf(token).map(_.mkString)
+    val locales = Seq(java.util.Locale.ROOT, java.util.Locale.forLanguageTag("tr"))
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(5000).withMaxSize(40),
+      Prop.forAll(page) { s =>
+        locales.forall(l => PageValidity.isContentsHtml(s) ==
+          LowerCasedValidity.isContentsHtml(s, l)) &&
+          (PageValidity.positionOfHtmlTags(s) >= 0) ==
+            (LowerCasedValidity.html(s.toLowerCase(java.util.Locale.ROOT)) >= 0) &&
+          (PageValidity.positionOfRssTags(s) >= 0) ==
+            (LowerCasedValidity.rss(s.toLowerCase(java.util.Locale.ROOT)) >= 0)
+      })
+    assert(result.passed, result.status.toString)
+    assert(PageValidity.isContentsHtml("<HTML><BODY>x</BODY></HTML>"))
+    assert(!PageValidity.isContentsHtml("<rss><channel><html><body>"))
+    assert(PageValidity.isContentsHtml("<html><body><rss><channel>"))
+  }
 }
