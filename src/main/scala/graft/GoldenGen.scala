@@ -45,33 +45,17 @@ object GoldenGen {
 
   /** `get_all_properties` section-list goldens (baseurl.py:520-574): one
     * HTML page and one RSS feed (with Entries) off the deterministic
-    * synthetic internet. WireSpec byte-compares against these. */
+    * synthetic internet, as the crawler buddy serves them. WireSpec and
+    * RemoteSpec byte-compare against these. */
   def writeAllPropertiesGolden(outDir: String): Unit = {
-    import graft.fetch.{FetchClient, SyntheticConfig, SyntheticInternet}
-    import graft.http.AllProperties
-    import graft.model.FetchRequest
-    import graft.parse.PageFactory
-    val internet = SyntheticInternet(SyntheticConfig(
-      seed = 42L, nSites = 1, pagesPerSite = 2, imagesPerSite = 1,
-      itemsPerFeed = 2))
-    def sections(url: String): String = {
-      val req = FetchRequest.default(url)
-      // fixed clock: crawl_time_s must be deterministic in the golden
-      val resp = FetchClient.fetchOne(req, internet, nowNanos = () => 0L)
-      val parsed = PageFactory.recognize(resp.url, resp.headers, resp.text)
-      val meta = PageFactory.toPageMeta(resp.url, parsed)
-      val entries = parsed match {
-        case Some(PageFactory.ParsedRss(m)) =>
-          m.entries(java.time.Instant.parse("2024-01-01T00:00:00Z"))
-            .map(AllProperties.entryData)
-        case _ => Seq.empty
-      }
-      AllProperties.buildString(meta, req, resp, entries)
-    }
+    import graft.fetch.{SyntheticConfig, SyntheticInternet}
+    val buddy = new graft.remote.CrawlerBuddy(SyntheticInternet(
+      SyntheticConfig(seed = 42L, nSites = 1, pagesPerSite = 2,
+        imagesPerSite = 1, itemsPerFeed = 2)))
     Files.writeString(Paths.get(s"$outDir/all_properties_html.json"),
-      sections("https://site-0.test"))
+      buddy.allPropertiesJson("https://site-0.test"))
     Files.writeString(Paths.get(s"$outDir/all_properties_rss.json"),
-      sections("https://site-0.test/feed"))
+      buddy.allPropertiesJson("https://site-0.test/feed"))
     println(s"[golden] wrote $outDir/all_properties_{html,rss}.json")
   }
 }

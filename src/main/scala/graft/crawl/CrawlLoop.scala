@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fetch.{FetchClient, SyntheticInternet}
 import graft.frontier.{Frontier, SeenSet}
-import graft.handlers.{Handlers, Social}
+import graft.handlers.Social
 import graft.http.{ContentTypes, Statuses}
 import graft.links.LinkExtractor
 import graft.model.{FetchRequest, FrontierRow}
@@ -744,22 +744,15 @@ object CrawlLoop {
     val window = if (config.delayS > 0) 1 else FetchWindow
     val lastFetchNanos = scala.collection.mutable.Map[String, Long]()
     final case class InFlight(url: String, urlHash: Long, host: String,
-        seq: Long, dispatched: Option[Handlers.HandlerResult],
-        main: FetchClient.Started, social: Option[(String, FetchClient.Started)])
+        seq: Long, page: FetchClient.StartedPage)
     val inFlight = mutable.Queue[InFlight]()
     Option(org.apache.spark.TaskContext.get()).foreach(
       _.addTaskCompletionListener[Unit] { _ =>
-        inFlight.foreach { f =>
-          f.main.cancel()
-          f.social.foreach(_._2.cancel())
-        }
+        inFlight.foreach(_.page.cancel())
       })
 
     def begin(url: String, urlHash: Long, host: String, seq: Long): InFlight = {
       val req = request(url).copy(delayS = config.delayS)
-      // handler dispatch may rewrite the URL before fetch (baseurl.py:305)
-      val dispatched = Handlers.dispatch(req.url)
-      val fetchUrl = dispatched.map(_.url).getOrElse(req.url)
       // per-host min-gap politeness (J-3; reference delay_s, request.py:31)
       if (req.delayS > 0) {
         lastFetchNanos.get(host).foreach { last =>
@@ -768,14 +761,9 @@ object CrawlLoop {
           if (waitMs > 0) Thread.sleep(waitMs)
         }
       }
-      // social-API side-fetch in the same partition (J-5; the reference
-      // fan-outs these on a thread pool, defaulturlhandler.py:183-207 —
-      // here it is one more request on the same host budget slot, started
-      // with the page's own)
-      InFlight(url, urlHash, host, seq, dispatched,
-        FetchClient.start(req.copy(url = fetchUrl), internet),
-        dispatched.flatMap(_.socialApiUrl).map(api =>
-          (api, FetchClient.start(req.copy(url = api), internet))))
+      // the social-API side-fetch starts with the page, on the same host
+      // budget slot (J-5)
+      InFlight(url, urlHash, host, seq, FetchClient.startPage(req, internet))
     }
     def fill(): Unit =
       while (inFlight.size < window && it.hasNext) {
@@ -788,20 +776,11 @@ object CrawlLoop {
       def next(): FetchedPage = {
         fill()
         val f = inFlight.dequeue()
-        val resp = FetchClient.finish(f.main, hashBody = false)
+        val (resp, social) = FetchClient.finishPage(f.page)
         if (config.delayS > 0) lastFetchNanos(f.host) = System.nanoTime()
-        val social: Social.SocialData = f.social match {
-          case Some((api, started)) =>
-            val sresp = FetchClient.finish(started, hashBody = false)
-            if (Statuses.isValid(sresp.status))
-              Social.forHandler(f.dispatched.get.name, api,
-                sresp.text.getOrElse(""))
-            else Social.SocialData()
-          case None => Social.SocialData()
-        }
         fill() // the next requests run while this page is parsed
         parsePage(f.url, f.urlHash, f.host, f.seq, resp, social,
-          f.dispatched.map(_.feeds).getOrElse(Seq.empty))
+          f.page.handler.map(_.feeds).getOrElse(Seq.empty))
       }
     }
   }

@@ -1,20 +1,23 @@
 package graft.fetch
 
-import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.charset.Charset
 import scala.collection.mutable
 import scala.util.Try
+import graft.handlers.{Handlers, Social}
 import graft.model.{FetchRequest, FetchResponse}
 import graft.http.{ContentTypes, Statuses}
-import graft.parse.{Hashing, PageValidity}
 
 /** The per-request fetch client — S1-S5 of the operator inventory.
   *
   * Called inside `mapPartitions`. A request is `start`ed on the watchdog
   * pool and `finish`ed later, so a partition can keep several in flight;
-  * `fetchOne` is the two back to back. The per-host minimum gap (the
-  * reference's `delay_s`, webtoolkit/request.py:31) is kept by the
-  * caller, `CrawlLoop.fetchAndParse`, which fetches one host's requests
-  * in one partition, one at a time, when the gap is set (J-3). Guards are
+  * `fetchOne` is the two back to back. `startPage`/`finishPage` are the
+  * same for a page: handler dispatch, the page request and the handler's
+  * social-API side-fetch, the one path the crawl and the crawler buddy
+  * share. The per-host minimum gap (the reference's `delay_s`,
+  * webtoolkit/request.py:31) is kept by the caller,
+  * `CrawlLoop.fetchAndParse`, which fetches one host's requests in one
+  * partition, one at a time, when the gap is set (J-3). Guards are
   * header-first like the reference (webtoolkit/crawlers/
   * requestscrawler.py:49-70): byte limit and accept types are checked
   * before the body is materialized.
@@ -133,9 +136,9 @@ object FetchClient {
     * (statuses.py:42-49) — also when it is collected later and returned in
     * between, since the pooled call records when it returned. An exception
     * inside the fetch is 600 with its message, never masked as a timeout.
-    * `hashBody = false` leaves `bodyHash` empty for a caller that never
-    * reads it. */
-  def finish(started: Started, hashBody: Boolean = true): FetchResponse = {
+    * The body is not hashed here (`bodyHash` stays empty): only the wire
+    * reads a hash, and `WireFormats.responseToJson` computes it. */
+  def finish(started: Started): FetchResponse = {
     val req = started.req
     def failed(status: Int, error: String) = FetchResponse(
       url = req.url, requestUrl = req.url, status = status,
@@ -146,13 +149,13 @@ object FetchClient {
     def timedOut = failed(Statuses.CodeTimeout,
       s"Timeout: ${req.timeoutS}s exceeded")
     try {
-      if (req.timeoutS <= 0) respond(started, started.raw.get(), hashBody)
+      if (req.timeoutS <= 0) respond(started, started.raw.get())
       else {
         val raw = started.raw.get(
           math.max(0L, started.deadline - System.nanoTime()),
           java.util.concurrent.TimeUnit.NANOSECONDS)
         if (raw.doneNanos - started.deadline > 0) timedOut
-        else respond(started, raw, hashBody)
+        else respond(started, raw)
       }
     } catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -167,8 +170,7 @@ object FetchClient {
   /** A returned raw fetch through the reference's guard order: status →
     * byte limit → accept types → decode. `url` is the final location,
     * `requestUrl` the original (response.py:197-210). */
-  private def respond(started: Started, fetched: RawFetch,
-      hashBody: Boolean): FetchResponse = {
+  private def respond(started: Started, fetched: RawFetch): FetchResponse = {
     val req = started.req
     val raw = fetched.resp
     val errors = mutable.ArrayBuffer[String]()
@@ -234,9 +236,46 @@ object FetchClient {
       errors = errors.toSeq,
       crawlTimeMs = (fetched.doneClock - started.t0) / 1000000L,
       recognizedContentType = recognized,
-      bodyHash =
-        if (!hashBody) None
-        else decodedText.flatMap(Hashing.md5).orElse(Hashing.md5Binary(body)))
+      bodyHash = None)
+  }
+
+  /** A page `startPage` set running: the handler its URL dispatched to,
+    * the page request and the handler's social-API request, if any. */
+  final class StartedPage private[fetch] (
+      val handler: Option[Handlers.HandlerResult],
+      private[fetch] val page: Started,
+      private[fetch] val social: Option[(String, Started)]) {
+    /** Interrupt both requests if they still run. */
+    def cancel(): Unit = { page.cancel(); social.foreach(_._2.cancel()) }
+  }
+
+  /** Start one page as the reference's `BaseUrl` does for the crawler and
+    * the crawler-buddy server alike: dispatch the handler, which may
+    * rewrite the URL before the fetch (baseurl.py:305), and start the
+    * page request together with the handler's social-API side-fetch
+    * (J-5; the reference fans these out on a thread pool,
+    * defaulturlhandler.py:183-207). */
+  def startPage(req: FetchRequest, internet: SyntheticInternet,
+      nowNanos: () => Long = () => System.nanoTime()): StartedPage = {
+    val handler = Handlers.dispatch(req.url)
+    val page = start(req.copy(url = handler.map(_.url).getOrElse(req.url)),
+      internet, nowNanos)
+    new StartedPage(handler, page, for (h <- handler; api <- h.socialApiUrl)
+      yield (api, start(req.copy(url = api), internet, nowNanos)))
+  }
+
+  /** Collect a started page: the page response, and the social data of
+    * a valid side-fetch (empty without one). */
+  def finishPage(started: StartedPage): (FetchResponse, Social.SocialData) = {
+    val resp = finish(started.page)
+    val social = started.social.fold(Social.SocialData()) { case (api, s) =>
+      val sresp = finish(s)
+      if (Statuses.isValid(sresp.status))
+        Social.forHandler(started.handler.get.name, api,
+          sresp.text.getOrElse(""))
+      else Social.SocialData()
+    }
+    (resp, social)
   }
 
   /** One request, started and collected: `finish(start(req))`. */

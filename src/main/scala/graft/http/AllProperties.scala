@@ -3,7 +3,6 @@ package graft.http
 import java.util.Base64
 import scala.collection.immutable.ListMap
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 import graft.model.{FetchRequest, FetchResponse, PageMeta}
 import graft.handlers.Social
 import graft.parse.Hashing
@@ -162,7 +161,7 @@ object AllProperties {
   /** Assemble the ordered section list (baseurl.py:520-574). */
   def build(meta: PageMeta, req: FetchRequest, resp: FetchResponse,
       entries: Seq[EntryData] = Seq.empty,
-      social: Option[Social.SocialData] = None): JArray = {
+      social: Social.SocialData = Social.SocialData()): JArray = {
 
     def section(name: String, data: JValue): JObject =
       JObject(List("name" -> JString(name), "data" -> data))
@@ -211,19 +210,12 @@ object AllProperties {
         }.toList)
       else JNull)
 
-    social.map(socialMap).filter(_.nonEmpty).foreach { sm =>
-      sections += section("Social", anyToJson(sm))
-    }
+    val sm = socialMap(social)
+    if (sm.nonEmpty) sections += section("Social", anyToJson(sm))
 
     sections += section("Entries",
       JArray(entries.map(e => anyToJson(entryMap(e))).toList))
 
     JArray(sections.toList)
   }
-
-  def buildString(meta: PageMeta, req: FetchRequest, resp: FetchResponse,
-      entries: Seq[EntryData] = Seq.empty,
-      social: Option[Social.SocialData] = None): String =
-    JsonMethods.compact(JsonMethods.render(build(meta, req, resp, entries,
-      social)))
 }

@@ -163,7 +163,9 @@ object WireFormats {
       "Charset" -> JString(resp.encoding),
       "hash" -> hash.map(h => JString(Base64.getEncoder.encodeToString(h))
         : JValue).getOrElse(JNull),
-      "body_hash" -> resp.bodyHash
+      // a fetched response carries no hash of its own; a decoded one
+      // keeps the hash it was sent with
+      "body_hash" -> resp.bodyHash.orElse(hash)
         .map(h => JString(Base64.getEncoder.encodeToString(h)): JValue)
         .getOrElse(JNull))
     ContentTypes.header(headers, "Last-Modified")

@@ -76,15 +76,3 @@ object ContentText {
     t
   }
 }
-
-/** Social-data derivations (A2)
-  * (reference: webtoolkit/handlers/handlerinterface.py:162-184). */
-object SocialData {
-  def upvoteRatio(up: Long, down: Long): Option[Double] =
-    if (up + down == 0) None else Some(up.toDouble / (up + down))
-
-  def upvoteDiff(up: Long, down: Long): Long = up - down
-
-  def upvoteViewRatio(up: Long, views: Long): Option[Double] =
-    if (views == 0) None else Some(up.toDouble / views)
-}

@@ -5,7 +5,6 @@ import org.json4s.jackson.JsonMethods
 import scala.collection.mutable
 
 import graft.fetch.{FetchClient, SyntheticInternet}
-import graft.handlers.{Handlers, Social}
 import graft.http.{AllProperties, WireFormats}
 import graft.model.{FetchRequest, FetchResponse}
 import graft.parse.PageFactory
@@ -32,10 +31,8 @@ final class CrawlerBuddy(internet: SyntheticInternet,
   /** Crawl one request and build the full section list — what the
     * reference buddy does per /api/get. */
   def allPropertiesFor(req: FetchRequest): JArray = {
-    val dispatched = Handlers.dispatch(req.url)
-    val fetchUrl = dispatched.map(_.url).getOrElse(req.url)
-    val resp = FetchClient.fetchOne(req.copy(url = fetchUrl), internet,
-      nowNanos = () => 0L) // deterministic crawl_time on the wire
+    val (resp, social) = FetchClient.finishPage(FetchClient.startPage(req,
+      internet, nowNanos = () => 0L)) // deterministic crawl_time on the wire
     val parsed = PageFactory.recognize(resp.url, resp.headers, resp.text)
     val meta = PageFactory.toPageMeta(resp.url, parsed)
     val entries = parsed match {
@@ -43,13 +40,6 @@ final class CrawlerBuddy(internet: SyntheticInternet,
         m.entries(java.time.Instant.parse("2024-01-01T00:00:00Z"))
           .map(AllProperties.entryData)
       case _ => Seq.empty
-    }
-    val social = dispatched.flatMap(_.socialApiUrl).flatMap { api =>
-      val sresp = FetchClient.fetchOne(req.copy(url = api), internet)
-      if (graft.http.Statuses.isValid(sresp.status))
-        Some(Social.forHandler(dispatched.get.name, api,
-          sresp.text.getOrElse("")))
-      else None
     }
     AllProperties.build(meta, req, resp, entries, social)
   }
@@ -60,9 +50,12 @@ final class CrawlerBuddy(internet: SyntheticInternet,
   }
 
   /** Decode the GET-encoded request (inverse of
-    * WireFormats.requestEncode; the buddy-side counterpart of S6). */
+    * WireFormats.requestEncode; the buddy-side counterpart of S6): the
+    * params laid over the default request's JSON, read by
+    * `WireFormats.jsonToRequest`. The map-valued params travel as JSON
+    * objects; an empty `accept_types` means no restriction. */
   def queryToRequest(query: String): Option[(FetchRequest, Map[String, String])] = {
-    val pairs = query.split("&").toSeq.flatMap { kv =>
+    val m = query.split("&").toSeq.flatMap { kv =>
       kv.split("=", 2) match {
         case Array(k, v) => Some(
           java.net.URLDecoder.decode(k, "UTF-8") ->
@@ -70,43 +63,19 @@ final class CrawlerBuddy(internet: SyntheticInternet,
         case Array(k) => Some(java.net.URLDecoder.decode(k, "UTF-8") -> "")
         case _        => None
       }
-    }
-    val m = pairs.toMap
+    }.toMap
     val url = m.getOrElse("url", return None)
-    var req = FetchRequest.default(url)
-    m.get("User-Agent").foreach(v => req = req.copy(userAgent = v))
-    m.get("timeout_s").flatMap(_.toIntOption)
-      .foreach(v => req = req.copy(timeoutS = v))
-    m.get("delay_s").flatMap(_.toIntOption)
-      .foreach(v => req = req.copy(delayS = v))
-    m.get("request_type").foreach(v => req = req.copy(requestType = v))
-    m.get("ssl_verify").foreach(v => req = req.copy(sslVerify = v == "True"))
-    m.get("respect_robots")
-      .foreach(v => req = req.copy(respectRobots = v == "True"))
-    m.get("accept_types").filter(_.nonEmpty)
-      .foreach(v => req = req.copy(acceptTypes = v.split(",").toSeq))
-    m.get("bytes_limit").flatMap(_.toLongOption)
-      .foreach(v => req = req.copy(bytesLimit = v))
-    m.get("http_proxy").foreach(v => req = req.copy(httpProxy = Some(v)))
-    m.get("https_proxy").foreach(v => req = req.copy(httpsProxy = Some(v)))
-    m.get("crawler_name").foreach(v => req = req.copy(crawlerName = v))
-    m.get("handler_name").foreach(v => req = req.copy(handlerName = Some(v)))
-    m.get("client_id").foreach(v => req = req.copy(clientId = Some(v)))
-    def jsonMap(k: String): Map[String, String] = m.get(k).map { raw =>
-      JsonMethods.parseOpt(raw) match {
-        case Some(JObject(fields)) => fields.collect {
-          case (kk, JString(vv)) => kk -> vv
-        }.toMap
-        case _ => Map.empty[String, String]
-      }
-    }.getOrElse(Map.empty)
-    val settings = jsonMap("settings")
-    val cookies = jsonMap("cookies")
-    val headers = jsonMap("request_headers")
-    if (settings.nonEmpty) req = req.copy(settings = settings)
-    if (cookies.nonEmpty) req = req.copy(cookies = cookies)
-    if (headers.nonEmpty) req = req.copy(requestHeaders = headers)
-    Some((req, m))
+    val JObject(defaults) =
+      WireFormats.requestToJson(FetchRequest.default(url))
+    val given = m.toList.flatMap {
+      case (k, v) if CrawlerBuddy.mapParams(k) =>
+        JsonMethods.parseOpt(v).collect { case o: JObject => k -> o }
+      case ("accept_types", "") => None
+      case (k, v)               => Some(k -> JString(v))
+    }
+    WireFormats.jsonToRequest(
+      JObject(defaults.filterNot(f => m.contains(f._1)) ++ given))
+      .map(req => (req, m))
   }
 
   private def ok(fields: (String, JValue)*): String =
@@ -194,6 +163,9 @@ final class CrawlerBuddy(internet: SyntheticInternet,
 }
 
 object CrawlerBuddy {
+
+  /** The request params whose GET value is a JSON object. */
+  private val mapParams = Set("settings", "cookies", "request_headers")
 
   /** The in-process transport: the client's wire bytes go straight into
     * the buddy's dispatcher — same protocol, no socket. */

@@ -507,12 +507,15 @@ class CrawlSpec extends AnyFunSuite {
       "sitemap-only page crawled")
   }
 
+  /** the social-handler fixture hosts, crawled once for the tests below */
+  lazy val socialNet = SyntheticInternet(SyntheticConfig(
+    seed = 42L, nSites = 1, socialSites = true))
+  lazy val socialCrawl = new CrawlLoop(spark, socialNet,
+    CrawlConfig(maxBatches = 4)).run(Seq("https://social.test/"))
+
   test("social side-fetch + two-phase handle discovery end-to-end (J-5)") {
     import org.apache.spark.sql.functions.col
-    val socialNet = SyntheticInternet(SyntheticConfig(
-      seed = 42L, nSites = 1, socialSites = true))
-    val loop = new CrawlLoop(spark, socialNet, CrawlConfig(maxBatches = 4))
-    val result = loop.run(Seq("https://social.test/"))
+    val result = socialCrawl
     val pages = result.pages.collect()
     def page(url: String) = pages.find(_.getAs[String]("url") == url)
 
@@ -546,6 +549,48 @@ class CrawlSpec extends AnyFunSuite {
     assert(graft.handlers.Handlers.youTubeChannelCode(
       "https://www.youtube.com/feeds/videos.xml?channel_id=UChandle123")
       .contains("UChandle123"))
+  }
+
+  test("the crawler buddy's Social section equals the crawl's social columns") {
+    import org.json4s._
+    val pages = socialCrawl.pages.collect()
+    val buddy = new graft.remote.CrawlerBuddy(socialNet)
+    // wire key → crawl column (AllProperties.socialMap)
+    val columns = Seq("thumbs_up" -> "social_thumbs_up",
+      "thumbs_down" -> "social_thumbs_down",
+      "view_count" -> "social_view_count",
+      "upvote_ratio" -> "social_upvote_ratio", "rating" -> "social_rating",
+      "followers_count" -> "social_followers",
+      "upvote_diff" -> "social_upvote_diff")
+    def social(url: String): Option[JValue] =
+      graft.remote.RemoteServer.readPropertiesSection("Social",
+        buddy.allPropertiesFor(graft.model.FetchRequest.default(url)))
+    def number(v: JValue): Option[Double] = v match {
+      case JInt(i)    => Some(i.toDouble)
+      case JLong(l)   => Some(l.toDouble)
+      case JDouble(d) => Some(d)
+      case _          => None
+    }
+    Seq("https://www.youtube.com/watch?v=vidA",
+      "https://www.reddit.com/r/test/comments/p1/title",
+      "https://news.ycombinator.com/item?id=99").foreach { url =>
+      val row = pages.find(_.getAs[String]("url") == url)
+      assert(row.nonEmpty, s"$url crawled")
+      val section = social(url)
+      assert(section.nonEmpty, s"$url has a Social section")
+      val crawled = columns.flatMap { case (key, column) =>
+        Option(row.get.getAs[Any](column)).map(v =>
+          key -> v.asInstanceOf[Number].doubleValue)
+      }
+      assert(crawled.nonEmpty, s"$url has social columns")
+      val served = columns.flatMap { case (key, _) =>
+        number(section.get \ key).map(key -> _)
+      }
+      assert(served == crawled, url)
+    }
+    assert(pages.exists(_.getAs[String]("url") == "https://social.test"))
+    assert(social("https://social.test").isEmpty,
+      "a page without a social handler has no Social section")
   }
 
   test("OPML and JSON pages flow through the dispatch cascade (F1/O1/J1)") {

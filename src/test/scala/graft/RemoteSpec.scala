@@ -123,6 +123,109 @@ class RemoteSpec extends AnyFunSuite {
     assert(decoded == req)
   }
 
+  /** The buddy's former per-field GET decoder, kept as the oracle of the
+    * one that reads the params through `WireFormats.jsonToRequest`. */
+  def perFieldDecode(query: String)
+      : Option[(FetchRequest, Map[String, String])] = {
+    val pairs = query.split("&").toSeq.flatMap { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => Some(
+          java.net.URLDecoder.decode(k, "UTF-8") ->
+            java.net.URLDecoder.decode(v, "UTF-8"))
+        case Array(k) => Some(java.net.URLDecoder.decode(k, "UTF-8") -> "")
+        case _        => None
+      }
+    }
+    val m = pairs.toMap
+    val url = m.getOrElse("url", return None)
+    var req = FetchRequest.default(url)
+    m.get("User-Agent").foreach(v => req = req.copy(userAgent = v))
+    m.get("timeout_s").flatMap(_.toIntOption)
+      .foreach(v => req = req.copy(timeoutS = v))
+    m.get("delay_s").flatMap(_.toIntOption)
+      .foreach(v => req = req.copy(delayS = v))
+    m.get("request_type").foreach(v => req = req.copy(requestType = v))
+    m.get("ssl_verify").foreach(v => req = req.copy(sslVerify = v == "True"))
+    m.get("respect_robots")
+      .foreach(v => req = req.copy(respectRobots = v == "True"))
+    m.get("accept_types").filter(_.nonEmpty)
+      .foreach(v => req = req.copy(acceptTypes = v.split(",").toSeq))
+    m.get("bytes_limit").flatMap(_.toLongOption)
+      .foreach(v => req = req.copy(bytesLimit = v))
+    m.get("http_proxy").foreach(v => req = req.copy(httpProxy = Some(v)))
+    m.get("https_proxy").foreach(v => req = req.copy(httpsProxy = Some(v)))
+    m.get("crawler_name").foreach(v => req = req.copy(crawlerName = v))
+    m.get("handler_name").foreach(v => req = req.copy(handlerName = Some(v)))
+    m.get("client_id").foreach(v => req = req.copy(clientId = Some(v)))
+    def jsonMap(k: String): Map[String, String] = m.get(k).map { raw =>
+      JsonMethods.parseOpt(raw) match {
+        case Some(JObject(fields)) => fields.collect {
+          case (kk, JString(vv)) => kk -> vv
+        }.toMap
+        case _ => Map.empty[String, String]
+      }
+    }.getOrElse(Map.empty)
+    val settings = jsonMap("settings")
+    val cookies = jsonMap("cookies")
+    val headers = jsonMap("request_headers")
+    if (settings.nonEmpty) req = req.copy(settings = settings)
+    if (cookies.nonEmpty) req = req.copy(cookies = cookies)
+    if (headers.nonEmpty) req = req.copy(requestHeaders = headers)
+    Some((req, m))
+  }
+
+  test("GET request decoding through jsonToRequest equals the per-field decoder") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    val str: Gen[String] = Gen.frequency(
+      2 -> Gen.const(""),
+      3 -> Gen.alphaNumStr.map(_.take(8)),
+      2 -> Gen.listOf(Gen.oneOf("&", "=", "+", "%", ",", " ", "\"", "{",
+        "}", "\u00e9", "\u4e2d", "a", "1")).map(_.mkString))
+    val nullableStr = Gen.frequency(1 -> Gen.const(null: String), 4 -> str)
+    val strMap = Gen.frequency(
+      2 -> Gen.const(Map.empty[String, String]),
+      3 -> Gen.mapOfN(3, Gen.zip(str, str)))
+    val number = Gen.frequency(4 -> Gen.choose(-5, 100),
+      1 -> Gen.oneOf(Int.MinValue, Int.MaxValue))
+    val request: Gen[FetchRequest] = for {
+      url <- Gen.oneOf(Gen.const("https://site-0.test/page/1"), str)
+      userAgent <- nullableStr
+      headers <- strMap
+      timeoutS <- number
+      delayS <- number
+      requestType <- Gen.oneOf(Gen.oneOf(FetchRequest.TypeFull,
+        FetchRequest.TypeHead, FetchRequest.TypePing), str)
+      sslVerify <- Gen.oneOf(true, false)
+      respectRobots <- Gen.oneOf(true, false)
+      acceptTypes <- Gen.oneOf(Gen.const(Seq.empty[String]),
+        Gen.const(Seq("")), Gen.listOfN(3, str))
+      bytesLimit <- Gen.oneOf(Gen.choose(0L, 10000000L),
+        Gen.const(Long.MaxValue))
+      httpProxy <- Gen.option(str)
+      httpsProxy <- Gen.option(str)
+      settings <- strMap
+      cookies <- strMap
+      crawlerName <- nullableStr
+      handlerName <- Gen.option(str)
+      clientId <- Gen.option(str)
+    } yield FetchRequest(url, userAgent, headers, timeoutS, delayS,
+      requestType, sslVerify, respectRobots, acceptTypes, bytesLimit,
+      httpProxy, httpsProxy, settings, cookies, crawlerName, handlerName,
+      clientId)
+    val buddy = new CrawlerBuddy(internet)
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(request) { r =>
+        val query = graft.http.WireFormats.requestEncode(r)
+        buddy.queryToRequest(query) == perFieldDecode(query)
+      })
+    assert(result.passed, result.status.toString)
+    // a value requestEncode never writes: the JSON decoder keeps the
+    // default for a lowercase boolean, where the per-field one read false
+    assert(buddy.queryToRequest("url=x&respect_robots=true").get._1
+      .respectRobots)
+  }
+
   test("whole-table wire export: all_properties as a DataFrame column") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.sql.shuffle.partitions", "2")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.http.WireFormats
 import graft.model.{FetchRequest, FetchResponse}
-import graft.parse.{ContentText, SocialData}
+import graft.parse.ContentText
 
 /** JSON wire formats (S6-S9), display transforms (X5), social derivations
   * (A2) and the YouTube JSON accessors (Y1/Y2). */
@@ -18,31 +18,16 @@ class WireSpec extends AnyFunSuite {
 
   test("get_all_properties section list matches the committed golden byte-for-byte") {
     // HTML page and RSS feed (with Entries) — the reference's flagship
-    // wire output (baseurl.py:520-574); goldens written by GoldenGen
-    import graft.fetch.{FetchClient, SyntheticConfig, SyntheticInternet}
-    import graft.http.AllProperties
-    import graft.parse.PageFactory
-    val internet = SyntheticInternet(SyntheticConfig(
-      seed = 42L, nSites = 1, pagesPerSite = 2, imagesPerSite = 1,
-      itemsPerFeed = 2))
-    def sections(url: String): String = {
-      val req = FetchRequest.default(url)
-      // fixed clock mirrors GoldenGen: crawl_time_s deterministic
-      val resp = FetchClient.fetchOne(req, internet, nowNanos = () => 0L)
-      val parsed = PageFactory.recognize(resp.url, resp.headers, resp.text)
-      val meta = PageFactory.toPageMeta(resp.url, parsed)
-      val entries = parsed match {
-        case Some(PageFactory.ParsedRss(m)) =>
-          m.entries(java.time.Instant.parse("2024-01-01T00:00:00Z"))
-            .map(AllProperties.entryData)
-        case _ => Seq.empty
-      }
-      AllProperties.buildString(meta, req, resp, entries)
-    }
+    // wire output (baseurl.py:520-574) as the crawler buddy serves it;
+    // goldens written by GoldenGen
+    import graft.fetch.{SyntheticConfig, SyntheticInternet}
+    val buddy = new graft.remote.CrawlerBuddy(SyntheticInternet(
+      SyntheticConfig(seed = 42L, nSites = 1, pagesPerSite = 2,
+        imagesPerSite = 1, itemsPerFeed = 2)))
     def golden(name: String): String =
       java.nio.file.Files.readString(java.nio.file.Paths.get(
         s"fixtures/golden/$name"))
-    val html = sections("https://site-0.test")
+    val html = buddy.allPropertiesJson("https://site-0.test")
     assert(html == golden("all_properties_html.json"))
     // structure: ordered section names, PropertiesHash present
     val names = "\"name\":\"([A-Za-z]+)\"".r
@@ -50,7 +35,7 @@ class WireSpec extends AnyFunSuite {
     assert(names == Seq("Properties", "PropertiesHash", "Text", "Streams",
       "Request", "Response", "Headers", "Entries"))
     assert(html.contains("\"crawler_type\":\"NoneType\"")) // request.py:190 quirk
-    val rss = sections("https://site-0.test/feed")
+    val rss = buddy.allPropertiesJson("https://site-0.test/feed")
     assert(rss == golden("all_properties_rss.json"))
     assert(rss.contains("\"name\":\"Entries\""))
     assert(rss.contains("\"date_published\":\"2024-01-"))
@@ -163,10 +148,15 @@ class WireSpec extends AnyFunSuite {
   }
 
   test("social derivations") {
-    assert(SocialData.upvoteRatio(80, 20).contains(0.8))
-    assert(SocialData.upvoteRatio(0, 0).isEmpty)
-    assert(SocialData.upvoteDiff(80, 20) == 60)
-    assert(SocialData.upvoteViewRatio(50, 1000).contains(0.05))
+    // the derivations the crawl emits (handlerinterface.py:162-184)
+    import graft.handlers.Social.SocialData
+    def votes(up: Long, down: Long) =
+      SocialData(thumbsUp = Some(up), thumbsDown = Some(down))
+    assert(votes(80, 20).derivedUpvoteRatio.contains(0.8))
+    assert(votes(0, 0).derivedUpvoteRatio.contains(0.0))
+    assert(votes(80, 20).derivedUpvoteDiff.contains(60L))
+    assert(SocialData(thumbsUp = Some(50), viewCount = Some(1000))
+      .upvoteViewRatio.contains(0.05))
   }
 
   test("youtube video json accessors") {
