@@ -10,7 +10,7 @@ import graft.frontier.{Frontier, SeenSet}
 import graft.handlers.Social
 import graft.http.{ContentTypes, Statuses}
 import graft.links.LinkExtractor
-import graft.model.{FetchRequest, FrontierRow}
+import graft.model.FetchRequest
 import graft.parse.PageFactory
 import graft.robots.Robots
 import graft.store.SnapshotStore
@@ -277,8 +277,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       doneParts.clear()
       dequeuedKeyParts.clear()
       redirectTombstoneParts.clear()
-      pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-      doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
+      pendingParts += fr.filter(col("state") === Frontier.StatePending)
+      doneParts += fr.filter(col("state") =!= Frontier.StatePending)
     }
 
     // the store's delta tables, each holding one batch's slice of a parts
@@ -616,21 +616,21 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val transitioned = gated
           .join(statusByHash, Seq("url_hash"), "left")
           .withColumn("state",
-            when(!col("allowed"), FrontierRow.StateExcluded)
+            when(!col("allowed"), Frontier.StateExcluded)
               .when(col("fetch_status").isNotNull &&
                 Statuses.retryCol(col("fetch_status")) &&
-                col("tries") + 1 < CrawlLoop.MaxTries, FrontierRow.StatePending)
+                col("tries") + 1 < CrawlLoop.MaxTries, Frontier.StatePending)
               .when(col("fetch_status").isNotNull &&
                 Statuses.invalidCol(col("fetch_status")),
-                FrontierRow.StateFailed)
-              .when(col("fetch_status").isNotNull, FrontierRow.StateFetched)
+                Frontier.StateFailed)
+              .when(col("fetch_status").isNotNull, Frontier.StateFetched)
               .otherwise(col("state")))
           .withColumn("tries",
             when(col("fetch_status").isNotNull &&
               Statuses.retryCol(col("fetch_status")),
               col("tries") + 1).otherwise(col("tries")))
           .withColumn("not_before",
-            when(col("state") === FrontierRow.StatePending &&
+            when(col("state") === Frontier.StatePending &&
               col("fetch_status").isNotNull,
               lit(batchTime(batch + 1))).otherwise(col("not_before")))
           .withColumn("old_ver", col("ver"))
@@ -641,9 +641,9 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         dequeuedKeyParts += transitioned
           .select(col("url_hash"), col("old_ver").as("ver"))
         pendingParts += transitioned
-          .filter(col("state") === FrontierRow.StatePending).drop("old_ver")
+          .filter(col("state") === Frontier.StatePending).drop("old_ver")
         doneParts += transitioned
-          .filter(col("state") =!= FrontierRow.StatePending).drop("old_ver")
+          .filter(col("state") =!= Frontier.StatePending).drop("old_ver")
         pendingParts += fresh
 
         // ---- domain-rules LRU eviction, AFTER the gate ------------------

@@ -12,6 +12,16 @@ import graft.url.UrlKit
   */
 object Frontier {
 
+  /** The values of a frontier row's `state` column. */
+  val StatePending = "pending"
+  val StateFetched = "fetched"
+  val StateFailed = "failed"
+  val StateExcluded = "excluded"
+
+  /** The deterministic dequeue order: ties never depend on partitioning. */
+  private def dequeueOrder: Seq[Column] =
+    Seq(desc("priority"), col("discovered_at"), col("url_hash"), col("url"))
+
   val cleanUdf = udf((url: String) => UrlKit.cleanedLink(url).orNull)
 
   /** Canonicalize + admission-filter raw links → frontier-shaped rows.
@@ -43,22 +53,19 @@ object Frontier {
       .withColumn("depth", depth)
       .withColumn("priority", lit(0.0))
       .withColumn("discovered_at", batchTime)
-      .withColumn("state", lit("pending"))
+      .withColumn("state", lit(StatePending))
       .withColumn("tries", lit(0))
       .withColumn("not_before", lit(null).cast("timestamp"))
   }
 
-  /** W2: salted per-host top-k dequeue with a deterministic total order —
-    * (priority desc, discovered_at, url_hash, url) — so ties never depend
-    * on partitioning. Returns rows to fetch this batch. */
+  /** W2: salted per-host top-k dequeue in `dequeueOrder`. Returns rows to
+    * fetch this batch. */
   def dequeue(frontier: DataFrame, batchTime: Column,
       perHostBudget: Int): DataFrame = {
     val eligible = frontier
-      .filter(col("state") === "pending")
+      .filter(col("state") === StatePending)
       .filter(col("not_before").isNull || col("not_before") <= batchTime)
-    val w = Window.partitionBy("host")
-      .orderBy(desc("priority"), col("discovered_at"), col("url_hash"),
-        col("url"))
+    val w = Window.partitionBy("host").orderBy(dequeueOrder: _*)
     eligible
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= perHostBudget)
@@ -66,13 +73,12 @@ object Frontier {
   }
 
   /** Global deterministic sequence for the crawl log: one number per batch
-    * over (priority desc, discovered_at, url_hash, url). Implemented as a
-    * parallel range-partitioned sort + zipWithIndex — a global
-    * `row_number()` window would drag every row through one partition. */
+    * in `dequeueOrder`. Implemented as a parallel range-partitioned sort +
+    * zipWithIndex — a global `row_number()` window would drag every row
+    * through one partition. */
   def withCrawlSeq(dequeued: DataFrame): DataFrame = {
     val spark = dequeued.sparkSession
-    val sorted = dequeued.orderBy(desc("priority"), col("discovered_at"),
-      col("url_hash"), col("url"))
+    val sorted = dequeued.orderBy(dequeueOrder: _*)
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+
         org.apache.spark.sql.types.StructField("seq",

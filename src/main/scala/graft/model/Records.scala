@@ -104,28 +104,8 @@ final case class PageMeta(
     feeds: Seq[String],
     favicons: Map[String, String],
     contentsLength: Option[Long],
-    pageType: String, // html | rss | opml | json | default | none
+    pageType: String, // html | rss | opml | default | none
     bodyHashHex: Option[String])
-
-/** One frontier row (SURVEY.md §1.4). */
-final case class FrontierRow(
-    url: String,
-    urlHash: Long,
-    host: String,
-    hostHash: Long,
-    depth: Int,
-    priority: Double,
-    discoveredAt: Timestamp,
-    state: String, // pending | fetched | failed | excluded
-    tries: Int,
-    notBefore: Option[Timestamp])
-
-object FrontierRow {
-  val StatePending = "pending"
-  val StateFetched = "fetched"
-  val StateFailed = "failed"
-  val StateExcluded = "excluded"
-}
 
 /** One row of the image corpus (BASELINE.json input_hint). */
 final case class ImageRow(

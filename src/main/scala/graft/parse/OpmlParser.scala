@@ -22,16 +22,3 @@ object OpmlParser {
   def isValid(contents: String): Boolean =
     contents != null && contents.contains("<opml")
 }
-
-/** JSON page semantics (reference: webtoolkit/pages.py:66-128).
-  *
-  * The reference nulls every successfully-parsed object that is not the
-  * empty map (`if self.json_obj != {}: self.json_obj = None`,
-  * pages.py:79-80) and `is_valid` requires a truthy object — so a JsonPage
-  * is never valid and never yields properties. Reproduced faithfully (it
-  * decides the PageFactory cascade order); the engine's real JSON access
-  * paths (YouTube/social handlers) use Spark's `from_json` instead.
-  */
-object JsonPage {
-  def isValid(contents: String): Boolean = false
-}

@@ -1,6 +1,5 @@
 package graft.parse
 
-import java.time.Instant
 import java.sql.Timestamp
 import graft.http.ContentTypes
 import graft.model.PageMeta
@@ -20,53 +19,45 @@ object PageFactory {
     val kind = "default"
   }
 
-  /** The trial order per suggested content type (pages.py:1339-1432).
-    * Media/font responses yield None; unknown types fall back to guessing. */
+  /** One candidate parser: the page it recognizes, or None when its
+    * validity check fails. */
+  private type Candidate = (String, String) => Option[Parsed]
+
+  private val html: Candidate = (url, contents) => {
+    val m = new HtmlMeta(url, contents)
+    Option.when(m.isValidHtml)(ParsedHtml(m))
+  }
+  private val rss: Candidate = (url, contents) => {
+    val m = new RssMeta(url, contents)
+    Option.when(m.isValid)(ParsedRss(m))
+  }
+  private val opml: Candidate = (url, contents) =>
+    Option.when(OpmlParser.isValid(contents))(
+      ParsedOpml(OpmlParser.entries(contents), url))
+
+  private val htmlFirst = List(html, rss, opml)
+  private val rssFirst = List(rss, opml, html)
+  // the reference tries a JsonPage first, but one is never valid: it
+  // nulls every parsed object that is not `{}` (pages.py:79-93)
+  private val jsonFirst = List(rss, html, opml)
+
+  /** The trial order per suggested content type (pages.py:1339-1432):
+    * each candidate runs at most once, the first valid one wins, else the
+    * throw-nothing default page. Media/font responses yield None; unknown
+    * types take the HTML order. */
   def recognize(url: String, headers: Map[String, String],
       text: Option[String]): Option[Parsed] = {
     val contents = text.getOrElse(return None)
     if (contents.isEmpty) return None
-
-    def tryHtml: Option[Parsed] = {
-      val m = new HtmlMeta(url, contents)
-      if (m.isValidHtml) Some(ParsedHtml(m)) else None
-    }
-    def tryRss: Option[Parsed] = {
-      val m = new RssMeta(url, contents)
-      if (m.isValid) Some(ParsedRss(m)) else None
-    }
-    def tryOpml: Option[Parsed] =
-      if (OpmlParser.isValid(contents))
-        Some(ParsedOpml(OpmlParser.entries(contents), url))
-      else None
-    def tryJson: Option[Parsed] = None // JsonPage is never valid (pages.py:79-93)
-
-    if (ContentTypes.isHtml(headers))
-      return tryHtml.orElse(tryRss).orElse(tryOpml).orElse(tryJson)
-        .orElse(guess(url, contents))
-    if (ContentTypes.isRss(headers))
-      return tryRss.orElse(tryOpml).orElse(tryHtml).orElse(tryJson)
-        .orElse(guess(url, contents))
-    if (ContentTypes.isJson(headers))
-      return tryJson.orElse(tryRss).orElse(tryHtml)
-        .orElse(guess(url, contents))
-    if (ContentTypes.contains(headers, "image") ||
-        ContentTypes.contains(headers, "audio") ||
-        ContentTypes.contains(headers, "video") ||
-        ContentTypes.contains(headers, "font")) return None
-    guess(url, contents)
-  }
-
-  /** Unknown content type: guess in html→rss→opml→json order, then the
-    * throw-nothing default page (pages.py:1404-1432). */
-  private def guess(url: String, contents: String): Option[Parsed] = {
-    val html = new HtmlMeta(url, contents)
-    if (html.isValidHtml) return Some(ParsedHtml(html))
-    val rss = new RssMeta(url, contents)
-    if (rss.isValid) return Some(ParsedRss(rss))
-    if (OpmlParser.isValid(contents))
-      return Some(ParsedOpml(OpmlParser.entries(contents), url))
-    Some(ParsedDefault(url, contents))
+    val order =
+      if (ContentTypes.isHtml(headers)) htmlFirst
+      else if (ContentTypes.isRss(headers)) rssFirst
+      else if (ContentTypes.isJson(headers)) jsonFirst
+      else if (Seq("image", "audio", "video", "font")
+          .exists(ContentTypes.contains(headers, _))) return None
+      else htmlFirst
+    order.iterator.flatMap(_(url, contents)).nextOption()
+      .orElse(Some(ParsedDefault(url, contents)))
   }
 
   /** Flatten a parsed page into the wide [[PageMeta]] struct
@@ -135,7 +126,5 @@ object PageFactory {
         PageMeta(url, None, None, None, None, None, None, 0, None, None,
           Some(url), None, None, None, None, None, None, None, None,
           Seq.empty, Map.empty, None, "none", None)
-      case Some(other) =>
-        toPageMeta(url, None).copy(pageType = other.kind)
     }
 }

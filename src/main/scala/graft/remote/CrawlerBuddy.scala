@@ -4,6 +4,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import scala.collection.mutable
 
+import graft.crawl.CrawlLoop
 import graft.fetch.{FetchClient, SyntheticInternet}
 import graft.http.{AllProperties, WireFormats}
 import graft.model.{FetchRequest, FetchResponse}
@@ -37,7 +38,7 @@ final class CrawlerBuddy(internet: SyntheticInternet,
     val meta = PageFactory.toPageMeta(resp.url, parsed)
     val entries = parsed match {
       case Some(PageFactory.ParsedRss(m)) =>
-        m.entries(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+        m.entries(CrawlLoop.StartTime)
           .map(AllProperties.entryData)
       case _ => Seq.empty
     }

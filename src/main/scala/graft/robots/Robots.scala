@@ -18,7 +18,7 @@ object Robots {
 
   final case class Rule(allow: Boolean, path: String)
   final case class Group(agents: Seq[String], rules: Seq[Rule])
-  final case class RobotRules(groups: Seq[Group], sitemaps: Seq[String]) {
+  final case class RobotRules(groups: Seq[Group]) {
 
     private def groupFor(userAgent: String): Option[Group] = {
       val ua = userAgent.split("/")(0).toLowerCase
@@ -58,7 +58,6 @@ object Robots {
     * open a group; a user-agent line after rules starts a new group). */
   def parse(contents: String): RobotRules = {
     val groups = mutable.ArrayBuffer[Group]()
-    val sitemaps = mutable.ArrayBuffer[String]()
     var agents = mutable.ArrayBuffer[String]()
     var rules = mutable.ArrayBuffer[Rule]()
     var state = 0 // 0=start, 1=saw user-agent, 2=saw rule
@@ -91,7 +90,6 @@ object Robots {
             case "allow" if state != 0 =>
               rules += Rule(allow = true, value)
               state = 2
-            case "sitemap" => sitemaps += value
             case _ =>
           }
         }
@@ -102,7 +100,7 @@ object Robots {
     // CPython but an empty Disallow means allow-everything: drop it)
     val cleaned = groups.map(g =>
       g.copy(rules = g.rules.filterNot(r => !r.allow && r.path.isEmpty)))
-    RobotRules(cleaned.toSeq, sitemaps.toSeq)
+    RobotRules(cleaned.toSeq)
   }
 
   /** Executor-local LRU of parsed rules keyed by the robots.txt body —

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.http.Statuses
 
 /** Structured-Streaming form of the crawl monitoring side (§2.10).
   *
@@ -47,7 +48,8 @@ object CrawlMetricsStream {
       .groupBy(window(col("event_time"), windowLen), col("host"))
       .agg(count(lit(1)).as("fetches"),
         avg("crawl_time_ms").as("avg_crawl_time_ms"),
-        sum(when(col("status") >= 400, 1).otherwise(0)).as("failures"))
+        sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
+          .as("failures"))
 
   /** Stateful per-host budget watch: one counter per host; emits one
     * alert per budget crossing. Pass a `stateTimeout` in production so

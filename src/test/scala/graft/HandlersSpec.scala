@@ -163,7 +163,6 @@ class HandlersSpec extends AnyFunSuite {
     assert(!rules.canFetch("*", "https://site.test/private/ok"))
     assert(!rules.canFetch("*", "https://site.test/tmp/x"))
     assert(!rules.canFetch("badbot", "https://site.test/anything"))
-    assert(rules.sitemaps == Seq("https://site.test/sitemap.xml"))
     assert(Robots.sitemapLines(contents) == Seq("https://site.test/sitemap.xml"))
   }
 

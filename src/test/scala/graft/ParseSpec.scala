@@ -351,6 +351,112 @@ class ParseSpec extends AnyFunSuite {
     assert(recognize("https://x.com", htmlHeaders, None).isEmpty)
   }
 
+  /** Page recognition as it was before the one-cascade rewrite: four
+    * hand-ordered chains, each ending in a `guess` that builds the HTML
+    * and RSS parsers again. Kept here only as the oracle of the property
+    * below. */
+  private object ChainedRecognize {
+    import graft.http.ContentTypes
+    import graft.parse.PageFactory._
+
+    def recognize(url: String, headers: Map[String, String],
+        text: Option[String]): Option[Parsed] = {
+      val contents = text.getOrElse(return None)
+      if (contents.isEmpty) return None
+      def tryHtml: Option[Parsed] = {
+        val m = new HtmlMeta(url, contents)
+        if (m.isValidHtml) Some(ParsedHtml(m)) else None
+      }
+      def tryRss: Option[Parsed] = {
+        val m = new RssMeta(url, contents)
+        if (m.isValid) Some(ParsedRss(m)) else None
+      }
+      def tryOpml: Option[Parsed] =
+        if (OpmlParser.isValid(contents))
+          Some(ParsedOpml(OpmlParser.entries(contents), url))
+        else None
+      def tryJson: Option[Parsed] = None
+      if (ContentTypes.isHtml(headers))
+        return tryHtml.orElse(tryRss).orElse(tryOpml).orElse(tryJson)
+          .orElse(guess(url, contents))
+      if (ContentTypes.isRss(headers))
+        return tryRss.orElse(tryOpml).orElse(tryHtml).orElse(tryJson)
+          .orElse(guess(url, contents))
+      if (ContentTypes.isJson(headers))
+        return tryJson.orElse(tryRss).orElse(tryHtml)
+          .orElse(guess(url, contents))
+      if (ContentTypes.contains(headers, "image") ||
+          ContentTypes.contains(headers, "audio") ||
+          ContentTypes.contains(headers, "video") ||
+          ContentTypes.contains(headers, "font")) return None
+      guess(url, contents)
+    }
+
+    private def guess(url: String, contents: String): Option[Parsed] = {
+      val html = new HtmlMeta(url, contents)
+      if (html.isValidHtml) return Some(ParsedHtml(html))
+      val rss = new RssMeta(url, contents)
+      if (rss.isValid) return Some(ParsedRss(rss))
+      if (OpmlParser.isValid(contents))
+        return Some(ParsedOpml(OpmlParser.entries(contents), url))
+      Some(ParsedDefault(url, contents))
+    }
+  }
+
+  test("page recognition equals the chained cascade it replaced") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    val contentTypes = Seq(Some("text/html"), Some("application/xhtml+xml"),
+      Some("application/rss+xml"), Some("application/atom+xml"),
+      Some("application/xml"), Some("application/json"), Some("text/x-opml"),
+      Some("text/plain"), Some("image/png"), Some("font/woff"), None)
+    val bodies = Seq(
+      """<html lang="en"><head><title>T</title>
+        |<meta name="description" content="d">
+        |<link rel="alternate" type="application/rss+xml" href="/feed">
+        |</head><body><a href="/x">x</a></body></html>""".stripMargin,
+      "<html><head><title>Bare</title></head></html>",
+      rssFeed,
+      """<?xml version="1.0"?><feed xmlns="http://www.w3.org/2005/Atom">
+        |<title>Atom Feed</title><entry><title>A1</title>
+        |<link href="https://x.com/a1"/></entry></feed>""".stripMargin,
+      """<?xml version="1.0"?><rdf:RDF
+        |xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+        |xmlns="http://purl.org/rss/1.0/"><channel><title>RDF Feed</title>
+        |<link>https://x.com/</link></channel><item><title>R1</title>
+        |<link>https://x.com/r1</link></item></rdf:RDF>""".stripMargin,
+      "<html><body>&lt;rss&gt;&lt;channel&gt;&lt;title&gt;T&lt;/title&gt;" +
+        "&lt;item&gt;&lt;title&gt;e&lt;/title&gt;&lt;link&gt;https://x.com/1" +
+        "&lt;/link&gt;&lt;/item&gt;&lt;/channel&gt;&lt;/rss&gt;</body></html>",
+      """<rss><channel><title>t</title><item><title>e</title>
+        |<link>https://x.com/1</link></item></channel></rss>
+        |<html><body>x</body></html>""".stripMargin,
+      """<?xml version="1.0"?>
+        |<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
+        |<url><loc>https://x.com/a</loc></url></urlset>""".stripMargin,
+      """<opml version="1.0"><body>
+        |<outline title="A" xmlUrl="https://a.com/rss"/></body></opml>""".stripMargin,
+      """{"title": "t", "items": [1, 2]}""",
+      "hello world")
+    // one body, or two glued together so that tags of several page types
+    // meet in one response
+    val body: Gen[String] = Gen.frequency(
+      3 -> Gen.oneOf(bodies),
+      2 -> Gen.zip(Gen.oneOf(bodies), Gen.oneOf(bodies)).map {
+        case (a, b) => a + b })
+    val url = "https://x.com/page"
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(Gen.oneOf(contentTypes), body) { (ct, b) =>
+        val headers = ct.map("Content-Type" -> _).toMap
+        val got = PageFactory.recognize(url, headers, Some(b))
+        val want = ChainedRecognize.recognize(url, headers, Some(b))
+        Prop(got.map(_.kind) == want.map(_.kind) &&
+          PageFactory.toPageMeta(url, got) ==
+            PageFactory.toPageMeta(url, want)) :| s"$ct\n$b"
+      })
+    assert(result.passed, result.status.toString)
+  }
+
   test("date guessing") {
     val now = Instant.parse("2024-06-01T00:00:00Z")
     assert(DateKit.guessDate("published on Jan. 15, 2024 by x", now)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.http.Statuses
 import graft.streaming.CrawlMetricsStream
 import graft.streaming.CrawlMetricsStream.{BudgetAlert, FetchEvent}
 
@@ -31,17 +32,22 @@ class StreamingSpec extends AnyFunSuite {
         windowLen = "5 minutes")
       .writeStream.format("memory").queryName("metrics")
       .outputMode("update").start()
+    // failures are what the crawl's own rollup counts (Statuses.invalidCol):
+    // 404 and 604 (timeout) fail, 403 and 429 do not
     input.addData(
       FetchEvent("https://a.test/1", "a.test", 200, 10L, ts(0)),
       FetchEvent("https://a.test/2", "a.test", 404, 30L, ts(1)),
-      FetchEvent("https://b.test/1", "b.test", 200, 50L, ts(2)))
+      FetchEvent("https://a.test/3", "a.test", 403, 20L, ts(1)),
+      FetchEvent("https://b.test/1", "b.test", 200, 50L, ts(2)),
+      FetchEvent("https://b.test/2", "b.test", 429, 70L, ts(3)),
+      FetchEvent("https://b.test/3", "b.test", 604, 90L, ts(4)))
     query.processAllAvailable()
     query.stop()
     val rows = spark.table("metrics").collect()
       .map(r => (r.getAs[String]("host"), r.getAs[Long]("fetches"),
         r.getAs[Long]("failures"), r.getAs[Double]("avg_crawl_time_ms")))
       .toSet
-    assert(rows == Set(("a.test", 2L, 1L, 20.0), ("b.test", 1L, 0L, 50.0)))
+    assert(rows == Set(("a.test", 3L, 1L, 20.0), ("b.test", 3L, 1L, 70.0)))
   }
 
   test("readStream file source over committed crawl_log snapshots (e2e)") {
@@ -84,7 +90,8 @@ class StreamingSpec extends AnyFunSuite {
     val batch = withEventTime(spark.read.parquet(dataPath))
       .groupBy(window(col("event_time"), "5 minutes"), col("host"))
       .agg(count(lit(1)).as("fetches"),
-        sum(when(col("status") >= 400, 1).otherwise(0)).as("failures"))
+        sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
+          .as("failures"))
       .collect()
       .map(r => (r.getAs[String]("host"), r.getAs[Long]("fetches"),
         r.getAs[Long]("failures"))).toSet
