@@ -3,7 +3,7 @@ package graft.crawl
 import java.sql.Timestamp
 import java.time.Instant
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fetch.{FetchClient, SyntheticInternet}
 import graft.frontier.{Frontier, SeenSet}
@@ -14,6 +14,7 @@ import graft.model.FetchRequest
 import graft.parse.PageFactory
 import graft.robots.Robots
 import graft.store.SnapshotStore
+import graft.streaming.CrawlMetricsStream
 
 /** One fetched-and-parsed page — fetch and parse are fused inside the same
   * partition so response bodies never cross a shuffle boundary. `url` is
@@ -104,7 +105,7 @@ final case class CrawlConfig(
     compactEvery: Int = 4,
     /** base cadence of the durable store; it matters only with a store.
       * The store has one layout: base snapshots (full
-      * frontier/seen/crawl_log), delta snapshots (pending rows, done rows,
+      * frontier/seen/crawl_log), delta snapshots (frontier rows,
       * dequeued-key and redirect tombstones, seen increment, log rows —
       * O(batch) bytes) and a batch_commit marker. A non-empty batch writes
       * either a base or its deltas, never both. false = a base every
@@ -151,8 +152,8 @@ final case class CrawlResult(
   * refresh + broadcast gate, host-partitioned fetch+parse, link
   * extraction, two-tier dedup, delta re-enqueue, snapshot commit.
   *
-  * State is kept as append-only delta parts (pending rows + dequeued-key
-  * tombstones + terminal rows + seen increments), each checkpointed once
+  * State is kept as append-only delta parts (frontier rows + dequeued-key
+  * and redirect tombstones + seen increments), each checkpointed once
   * when produced, and folded into one base at the base cadence (see
   * `compactEvery`) — between bases the per-batch write cost is
   * proportional to the batch, not to the frontier
@@ -186,13 +187,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     * anti-join is co-partitioned and only the miss list shuffles, is
     * design-scale work that has not been built. Returns (host,
     * robots_txt, robots_status, fetched_batch), checkpointed, with the
-    * new-row count riding the checkpoint as an observed metric. */
+    * new-row count. */
   private def fetchRobots(missingHosts: DataFrame, batch: Int,
       parts: Int): (DataFrame, Long) = {
     val internetL = internet
     import spark.implicits._
-    val obs = org.apache.spark.sql.Observation()
-    val fetched = missingHosts.select("host").as[String]
+    checkpointCounted(missingHosts.select("host").as[String]
       .repartition(parts, col("host"))
       .mapPartitions { hosts =>
         hosts.map { host =>
@@ -203,10 +203,17 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             resp.status)
         }
       }.toDF("host", "robots_txt", "robots_status")
-      .withColumn("fetched_batch", lit(batch))
-      .observe(obs, count(lit(1)).as("n"))
+      .withColumn("fetched_batch", lit(batch)))
+  }
+
+  /** Materializes `df` in one job and returns it with its row count, which
+    * rides that job as an observed metric (a scalar; the rows stay
+    * distributed). */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val checkpointed = df.observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    (fetched, obs.get("n").asInstanceOf[Long])
+    (checkpointed, obs.get("n").asInstanceOf[Long])
   }
 
   def run(seeds: Seq[String]): CrawlResult = runInternal(Some(seeds))
@@ -235,14 +242,14 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
 
   private def runInternal(seedsOpt: Option[Seq[String]]): CrawlResult = {
     // ---- delta state ---------------------------------------------------
-    // pending = union(pendingParts) minus dequeued (url_hash, ver) keys
-    // minus redirect-target urls; checkpointed parts only where a frame is
-    // reused across batches — per-batch transitions stay lazy and execute
-    // inside the NEXT batch's dequeue job (one fewer action per batch)
-    val pendingParts = mutable.ArrayBuffer[DataFrame]()
+    // frontier = union(frontierParts): its pending rows minus dequeued
+    // (url_hash, ver) keys and redirect-target urls, and its other rows
+    // as they are; checkpointed parts only where a frame is reused across
+    // batches — per-batch transitions stay lazy and execute inside the
+    // NEXT batch's dequeue job (one fewer action per batch)
+    val frontierParts = mutable.ArrayBuffer[DataFrame]()
     val dequeuedKeyParts = mutable.ArrayBuffer[DataFrame]()
     val redirectTombstoneParts = mutable.ArrayBuffer[DataFrame]()
-    val doneParts = mutable.ArrayBuffer[DataFrame]()
     val seenParts = mutable.ArrayBuffer[DataFrame]()
     val logParts = mutable.ArrayBuffer[DataFrame]()
     val pageParts = mutable.ArrayBuffer[DataFrame]()
@@ -253,39 +260,40 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       if (parts.isEmpty) spark.emptyDataFrame
       else parts.reduce(_ unionByName _)
 
+    // only pending rows meet the tombstones: a row leaves pending under a
+    // new version, so no dequeued key matches a done row, and the state
+    // filter sits below both anti-joins' shuffles
     def pendingView: DataFrame = {
-      var base = unionAll(pendingParts.toSeq)
+      var view = unionAll(frontierParts.toSeq)
+        .filter(col("state") === Frontier.StatePending)
       if (dequeuedKeyParts.nonEmpty)
-        base = base.join(unionAll(dequeuedKeyParts.toSeq),
+        view = view.join(unionAll(dequeuedKeyParts.toSeq),
           Seq("url_hash", "ver"), "left_anti")
       // a URL whose content a redirect already delivered must never be
       // fetched again, even if it was enqueued before the redirect was
       // discovered (response.py:197-210)
       if (redirectTombstoneParts.nonEmpty)
-        base = base.join(unionAll(redirectTombstoneParts.toSeq),
+        view = view.join(unionAll(redirectTombstoneParts.toSeq),
           Seq("url_hash", "url"), "left_anti")
-      base
+      view
     }
+    def frontierView: DataFrame = unionAll(frontierParts.toSeq)
+      .filter(col("state") =!= Frontier.StatePending)
+      .unionByName(pendingView)
     def seenView: DataFrame = unionAll(seenParts.toSeq)
-    def frontierView: DataFrame =
-      if (doneParts.isEmpty) pendingView
-      else unionAll(doneParts.toSeq).unionByName(pendingView)
     // a frontier base snapshot replaces every frontier part: its rows
     // already have the tombstones applied
     def setFrontierBase(fr: DataFrame): Unit = {
-      pendingParts.clear()
-      doneParts.clear()
+      frontierParts.clear()
       dequeuedKeyParts.clear()
       redirectTombstoneParts.clear()
-      pendingParts += fr.filter(col("state") === Frontier.StatePending)
-      doneParts += fr.filter(col("state") =!= Frontier.StatePending)
+      frontierParts += fr
     }
 
     // the store's delta tables, each holding one batch's slice of a parts
     // array: the parts past that array's commit mark
     val deltaTables = Seq(
-      "frontier_pending_delta" -> pendingParts,
-      "frontier_done_delta" -> doneParts,
+      "frontier_delta" -> frontierParts,
       "frontier_dequeued_keys" -> dequeuedKeyParts,
       "frontier_redirect_tombstones" -> redirectTombstoneParts,
       "seen_delta" -> seenParts,
@@ -319,7 +327,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     val startBatch = seedsOpt match {
       case Some(seeds) =>
         val seeded = tapped(seedFrontier(seeds)).localCheckpoint(true)
-        pendingParts += seeded
+        frontierParts += seeded
         seenParts += seeded.select("url", "url_hash")
         noteInserted(seeds.size.toLong)
         0
@@ -332,13 +340,10 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val st = store.getOrElse(throw new IllegalStateException(
           "resume() requires a SnapshotStore"))
         def loadSeen(frames: Seq[DataFrame]): Unit = {
-          val obs = org.apache.spark.sql.Observation()
-          val seenLoaded = tapped(frames.map(_.select("url", "url_hash"))
-            .reduce(_ unionByName _))
-            .observe(obs, count(lit(1)).as("n"))
-            .localCheckpoint(true)
+          val (seenLoaded, n) = checkpointCounted(tapped(
+            frames.map(_.select("url", "url_hash")).reduce(_ unionByName _)))
           seenParts += seenLoaded
-          noteInserted(obs.get("n").asInstanceOf[Long])
+          noteInserted(n)
         }
         // anchor on the batch-commit MARKER — the one tiny table written
         // LAST in each batch's durable commit. A crash anywhere mid-commit
@@ -438,9 +443,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
       val bt = batchTime(batch)
       // ---- dequeue: ONE action materializes the batch AND the pending
       //      transitions of previous batches still in the lazy view; the
-      //      row count rides along as an observed metric (a scalar — the
-      //      batch's hosts stay distributed) --------------------------
-      val obsDequeue = org.apache.spark.sql.Observation()
+      //      row count rides along (a scalar — the batch's hosts stay
+      //      distributed) ---------------------------------------------
       val (dequeued, n) = {
         // shard gate: only this instance's host-hash range dequeues;
         // out-of-range rows stay pending for the shard that owns them
@@ -450,11 +454,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
               lit(config.shardCount)) === lit(config.shardIndex.toLong))
           else pendingView
         val raw = Frontier.dequeue(eligible, lit(bt), config.perHostBudget)
-        val d = (if (config.emitCrawlSeq) Frontier.withCrawlSeq(raw)
+        checkpointCounted(if (config.emitCrawlSeq) Frontier.withCrawlSeq(raw)
           else raw.withColumn("seq", col("url_hash")))
-          .observe(obsDequeue, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        (d, obsDequeue.get("n").asInstanceOf[Long])
       }
       counterRows += ((batch, "dequeued", n))
       if (n > 0) {
@@ -539,12 +540,8 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             regexp_extract(col("url"), "/img/(img\\d+)\\.", 1))
           .withColumn("batch", lit(batch))
         // metrics rollup (A4) + approximate distinct monitoring (A5)
-        metricParts += fetched.groupBy("host")
-          .agg(count(lit(1)).as("fetches"),
-            avg("crawl_time_ms").as("avg_crawl_time_ms"),
-            sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
-              .as("failures"),
-            approx_count_distinct(col("url_hash")).as("approx_distinct_urls"))
+        metricParts += CrawlMetricsStream.hostRollup(fetched.groupBy("host"),
+          approx_count_distinct(col("url_hash")).as("approx_distinct_urls"))
           .withColumn("batch", lit(batch))
 
         // ---- new links: pages ∪ feeds ∪ entries ∪ sitemap URLs → admit →
@@ -590,14 +587,9 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             Seq("url_hash", "url"), "left_anti")
           .withColumn("ver", lit(batch + 1))
           .withColumn("src", lit("link"))
-        val obsDelta = org.apache.spark.sql.Observation()
-        val delta =
-          tapped(freshRows.unionByName(redirCredit,
-              allowMissingColumns = true))
-            .observe(obsDelta, count(lit(1)).as("n"))
-            .localCheckpoint(true)
+        val (delta, deltaN) = checkpointCounted(tapped(
+          freshRows.unionByName(redirCredit, allowMissingColumns = true)))
         admitted.unpersist()
-        val deltaN = obsDelta.get("n").asInstanceOf[Long]
         counterRows += ((batch, "links_seen_delta", deltaN))
         noteInserted(deltaN)
         counterRows += ((batch, "bloom_inserted_total", bloomInserted))
@@ -633,18 +625,15 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             when(col("state") === Frontier.StatePending &&
               col("fetch_status").isNotNull,
               lit(batchTime(batch + 1))).otherwise(col("not_before")))
-          .withColumn("old_ver", col("ver"))
           .withColumn("ver", lit(batch + 1))
           .drop("fetch_status", "allowed", "seq")
-        // tombstone the dequeued versions; re-enqueue retries under a new
-        // version so they survive the tombstone anti-join
-        dequeuedKeyParts += transitioned
-          .select(col("url_hash"), col("old_ver").as("ver"))
-        pendingParts += transitioned
-          .filter(col("state") === Frontier.StatePending).drop("old_ver")
-        doneParts += transitioned
-          .filter(col("state") =!= Frontier.StatePending).drop("old_ver")
-        pendingParts += fresh
+        // tombstone the dequeued versions — the gate and status joins are
+        // left joins on `dequeued`, so the transition's keys are the
+        // checkpointed batch's keys; the transition re-appends every
+        // dequeued row under a new version, which survives the tombstone
+        frontierParts += transitioned
+        dequeuedKeyParts += dequeued.select("url_hash", "ver")
+        frontierParts += fresh
 
         // ---- domain-rules LRU eviction, AFTER the gate ------------------
         // (reference evicts by insert date, domaincache.py:244-259; an

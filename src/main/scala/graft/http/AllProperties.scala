@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.json4s._
 import graft.model.{FetchRequest, FetchResponse, PageMeta}
 import graft.handlers.Social
-import graft.parse.Hashing
+import graft.parse.{FeedEntry, Hashing}
 
 /** `get_all_properties` — the reference's flagship wire output: an ordered
   * list of named sections (reference: webtoolkit/baseurl.py:520-574):
@@ -16,22 +16,6 @@ import graft.parse.Hashing
   * output interchangeable with the reference's.
   */
 object AllProperties {
-
-  /** One parsed feed entry in wire form (pages.py:142-166 property map,
-    * with `feed_entry` stripped and dates stringified per
-    * baseurl.py:655-670). */
-  final case class EntryData(
-      link: String,
-      title: Option[String],
-      description: Option[String],
-      thumbnail: Option[String],
-      language: Option[String],
-      author: Option[String],
-      album: Option[String],
-      bookmarked: Boolean,
-      datePublishedIso: Option[String],
-      source: Option[String],
-      tags: Option[String])
 
   // ---------------------------------------------------------- python repr
   // PropertiesHash is MD5 over Python's `str(properties_dict)`
@@ -119,32 +103,21 @@ object AllProperties {
     case other => JString(other.toString)
   }
 
-  /** Engine FeedEntry → wire entry (dates stringified, baseurl.py:660-667). */
-  def entryData(e: graft.parse.FeedEntry): EntryData = EntryData(
-    link = e.link,
-    title = e.title,
-    description = e.description,
-    thumbnail = e.thumbnail,
-    language = e.language,
-    author = e.author,
-    album = Option(e.album).filter(_.nonEmpty),
-    bookmarked = e.bookmarked,
-    datePublishedIso = Option(e.datePublished).map(_.toString),
-    source = Option(e.source),
-    tags = if (e.tags.isEmpty) None else Some(e.tags.mkString(", ")))
-
-  private def entryMap(e: EntryData): ListMap[String, Any] = ListMap(
+  /** One parsed feed entry in wire form: the pages.py:142-166 property
+    * map with `feed_entry` stripped and dates stringified
+    * (baseurl.py:655-670). */
+  private def entryMap(e: FeedEntry): ListMap[String, Any] = ListMap(
     "link" -> e.link,
     "title" -> e.title,
     "description" -> e.description,
     "thumbnail" -> e.thumbnail,
     "language" -> e.language,
     "author" -> e.author,
-    "album" -> e.album,
+    "album" -> Option(e.album).filter(_.nonEmpty),
     "bookmarked" -> e.bookmarked,
-    "date_published" -> e.datePublishedIso,
-    "source" -> e.source,
-    "tags" -> e.tags)
+    "date_published" -> Option(e.datePublished).map(_.toString),
+    "source" -> Option(e.source),
+    "tags" -> (if (e.tags.isEmpty) None else Some(e.tags.mkString(", "))))
 
   private def socialMap(s: Social.SocialData): ListMap[String, Any] = {
     var m = ListMap[String, Any]()
@@ -160,7 +133,7 @@ object AllProperties {
 
   /** Assemble the ordered section list (baseurl.py:520-574). */
   def build(meta: PageMeta, req: FetchRequest, resp: FetchResponse,
-      entries: Seq[EntryData] = Seq.empty,
+      entries: Seq[FeedEntry] = Seq.empty,
       social: Social.SocialData = Social.SocialData()): JArray = {
 
     def section(name: String, data: JValue): JObject =

@@ -37,10 +37,8 @@ final class CrawlerBuddy(internet: SyntheticInternet,
     val parsed = PageFactory.recognize(resp.url, resp.headers, resp.text)
     val meta = PageFactory.toPageMeta(resp.url, parsed)
     val entries = parsed match {
-      case Some(PageFactory.ParsedRss(m)) =>
-        m.entries(CrawlLoop.StartTime)
-          .map(AllProperties.entryData)
-      case _ => Seq.empty
+      case Some(PageFactory.ParsedRss(m)) => m.entries(CrawlLoop.StartTime)
+      case _                              => Seq.empty
     }
     AllProperties.build(meta, req, resp, entries, social)
   }
@@ -68,14 +66,14 @@ final class CrawlerBuddy(internet: SyntheticInternet,
     val url = m.getOrElse("url", return None)
     val JObject(defaults) =
       WireFormats.requestToJson(FetchRequest.default(url))
-    val given = m.toList.flatMap {
+    val overrides = m.toList.flatMap {
       case (k, v) if CrawlerBuddy.mapParams(k) =>
         JsonMethods.parseOpt(v).collect { case o: JObject => k -> o }
       case ("accept_types", "") => None
       case (k, v)               => Some(k -> JString(v))
     }
     WireFormats.jsonToRequest(
-      JObject(defaults.filterNot(f => m.contains(f._1)) ++ given))
+      JObject(defaults.filterNot(f => m.contains(f._1)) ++ overrides))
       .map(req => (req, m))
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.http.Statuses
@@ -40,16 +40,21 @@ object CrawlMetricsStream {
 
   final case class BudgetAlert(host: String, fetches: Long, budget: Int)
 
+  /** The A4 per-host rollup of fetch events — `fetches`,
+    * `avg_crawl_time_ms`, `failures` — followed by `extra`; the crawl's
+    * per-batch metrics and `windowedMetrics` both aggregate with it. */
+  def hostRollup(events: RelationalGroupedDataset, extra: Column*): DataFrame =
+    events.agg(count(lit(1)).as("fetches"),
+      avg("crawl_time_ms").as("avg_crawl_time_ms") +:
+        sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
+          .as("failures") +: extra: _*)
+
   /** Watermarked sliding-window per-host metrics (A4 as a stream). */
   def windowedMetrics(events: DataFrame, watermark: String = "10 minutes",
       windowLen: String = "5 minutes"): DataFrame =
-    events
+    hostRollup(events
       .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), windowLen), col("host"))
-      .agg(count(lit(1)).as("fetches"),
-        avg("crawl_time_ms").as("avg_crawl_time_ms"),
-        sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
-          .as("failures"))
+      .groupBy(window(col("event_time"), windowLen), col("host")))
 
   /** Stateful per-host budget watch: one counter per host; emits one
     * alert per budget crossing. Pass a `stateTimeout` in production so

@@ -31,6 +31,22 @@ class CrawlSpec extends AnyFunSuite {
     .filter(org.apache.spark.sql.functions.col("counter") === "bloom_enabled")
     .orderBy("batch").collect().map(_.getAs[Long]("value")).toSeq
 
+  /** the crawl log without its timing column, as sorted row strings */
+  def logRows(r: graft.crawl.CrawlResult): Seq[String] = r.crawlLog
+    .select("batch", "seq", "url", "final_url", "status", "host",
+      "content_type")
+    .collect().map(_.toString).sorted.toSeq
+
+  def seenUrls(r: graft.crawl.CrawlResult): Seq[String] =
+    r.seen.select("url").collect().map(_.getString(0)).sorted.toSeq
+
+  /** every frontier row, pending and done, on the columns that carry its
+    * crawl state, as sorted row strings */
+  def frontierRows(r: graft.crawl.CrawlResult): Seq[String] = r.frontier
+    .select("url", "state", "tries", "not_before", "ver", "depth",
+      "discovered_at")
+    .collect().map(_.toString).sorted.toSeq
+
   test("crawl discovers pages across sites and batches") {
     spark.sparkContext.setLogLevel("WARN")
     val result = newLoop().run(Seq("https://site-0.test/"))
@@ -116,7 +132,7 @@ class CrawlSpec extends AnyFunSuite {
   test("resume() continues exactly: interrupted + resumed == uninterrupted") {
     // the north rule's exact-resume: 2 durable batches, process "dies",
     // a NEW loop resumes 2 more — the combined crawl log, seen set and
-    // pending frontier must equal a 4-batch run that never stopped
+    // frontier must equal a 4-batch run that never stopped
     val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
     val store = new SnapshotStore(dir)
     newLoop(CrawlConfig(maxBatches = 2), Some(store))
@@ -124,18 +140,10 @@ class CrawlSpec extends AnyFunSuite {
     val resumed = newLoop(CrawlConfig(maxBatches = 2), Some(store)).resume()
     val fresh = newLoop(CrawlConfig(maxBatches = 4))
       .run(Seq("https://site-0.test/"))
-    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
-      .select("batch", "seq", "url", "final_url", "status", "host",
-        "content_type")
-      .collect().map(_.toString).sorted.toSeq
     assert(logRows(resumed) == logRows(fresh),
       "resumed crawl log diverges from the uninterrupted run")
-    assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
-      .toSeq ==
-      fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
-    import org.apache.spark.sql.functions.col
-    assert(resumed.frontier.filter(col("state") === "pending").count() ==
-      fresh.frontier.filter(col("state") === "pending").count())
+    assert(seenUrls(resumed) == seenUrls(fresh))
+    assert(frontierRows(resumed) == frontierRows(fresh))
     // and the resumed run kept committing: snapshots 0..3 exist
     assert(store.latestSnapshot("frontier").contains(3L))
     assert(store.verify("crawl_log", 3).isEmpty)
@@ -168,38 +176,23 @@ class CrawlSpec extends AnyFunSuite {
     assert(store.snapshots("crawl_log_delta").contains(3L))
     val fresh = newLoop(CrawlConfig(maxBatches = 4))
       .run(Seq("https://site-0.test/"))
-    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
-      .select("batch", "seq", "url", "final_url", "status", "host",
-        "content_type")
-      .collect().map(_.toString).sorted.toSeq
     assert(logRows(resumed) == logRows(fresh),
       "delta-resumed crawl log diverges from the uninterrupted run")
-    assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
-      .toSeq ==
-      fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
+    assert(seenUrls(resumed) == seenUrls(fresh))
+    assert(frontierRows(resumed) == frontierRows(fresh))
   }
 
   test("a store resumes under either cadence: interrupted + resumed == uninterrupted") {
     // one store layout whatever durableDeltas says (it only sets how often
     // a base is written), so 2 batches under one setting resume 2 more
     // under the other and must equal a 4-batch run that never stopped
-    import org.apache.spark.sql.functions.col
     val seeds = Seq("https://site-0.test/")
     val delta = CrawlConfig(maxBatches = 2, durableDeltas = true,
       compactEvery = 3)
     val full = CrawlConfig(maxBatches = 2)
     val fresh = newLoop(CrawlConfig(maxBatches = 4)).run(seeds)
-    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
-      .select("batch", "seq", "url", "final_url", "status", "host",
-        "content_type")
-      .collect().map(_.toString).sorted.toSeq
-    def seenUrls(r: graft.crawl.CrawlResult) =
-      r.seen.select("url").collect().map(_.getString(0)).sorted.toSeq
-    def pending(r: graft.crawl.CrawlResult) =
-      r.frontier.filter(col("state") === "pending").count()
-    val deltaTables = Seq("frontier_pending_delta", "frontier_done_delta",
-      "frontier_dequeued_keys", "frontier_redirect_tombstones", "seen_delta",
-      "crawl_log_delta")
+    val deltaTables = Seq("frontier_delta", "frontier_dequeued_keys",
+      "frontier_redirect_tombstones", "seen_delta", "crawl_log_delta")
     for ((first, second) <- Seq(delta -> full, full -> delta)) {
       val how = s"durableDeltas ${first.durableDeltas} -> " +
         s"${second.durableDeltas}"
@@ -210,7 +203,11 @@ class CrawlSpec extends AnyFunSuite {
       val resumed = newLoop(second, Some(store)).resume()
       assert(logRows(resumed) == logRows(fresh), how)
       assert(seenUrls(resumed) == seenUrls(fresh), how)
-      assert(pending(resumed) == pending(fresh), how)
+      assert(frontierRows(resumed) == frontierRows(fresh), how)
+      // the base tables, the five delta tables and the marker, no other
+      assert(new java.io.File(dir).list().toSet.subsetOf(
+        Set("frontier", "seen", "crawl_log", "batch_commit") ++ deltaTables),
+        how)
       if (second == full) {
         // each resumed batch wrote a base and no delta slice
         assert(store.snapshots("frontier") == Seq(2L, 3L), how)
@@ -248,14 +245,9 @@ class CrawlSpec extends AnyFunSuite {
       "the torn batch's frontier snapshot 2 must be dropped")
     val resumed = newLoop(delta, Some(store)).resume()
     val fresh = newLoop(CrawlConfig(maxBatches = 4)).run(seeds)
-    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog
-      .select("batch", "seq", "url", "final_url", "status", "host",
-        "content_type")
-      .collect().map(_.toString).sorted.toSeq
     assert(logRows(resumed) == logRows(fresh))
-    assert(resumed.seen.select("url").collect().map(_.getString(0)).sorted
-      .toSeq ==
-      fresh.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
+    assert(seenUrls(resumed) == seenUrls(fresh))
+    assert(frontierRows(resumed) == frontierRows(fresh))
   }
 
   test("per-host delay holds across salt buckets: one host's fetches are serial") {
@@ -297,8 +289,6 @@ class CrawlSpec extends AnyFunSuite {
     assert(spread.pages.count() >= 4 * 4)
     assert(perPartition.keySet == (0 until 4).toSet,
       s"one host's URLs per fetch partition: $perPartition")
-    def logRows(r: graft.crawl.CrawlResult) = r.crawlLog.drop("crawl_time_ms")
-      .collect().map(_.toString).sorted.toSeq
     assert(logRows(spread) == logRows(crawl(1)))
   }
 
@@ -700,8 +690,6 @@ class CrawlSpec extends AnyFunSuite {
       "empty batches must not rewrite unchanged state tables")
     val resumedF = new CrawlLoop(spark, tiny,
       CrawlConfig(maxBatches = 1), Some(storeF)).resume()
-    assert(resumedF.seen.select("url").collect().map(_.getString(0)).sorted
-      .toSeq ==
-      rF.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
+    assert(seenUrls(resumedF) == seenUrls(rF))
   }
 }

@@ -187,6 +187,64 @@ class HandlersSpec extends AnyFunSuite {
     assert(Moderation.age("one porn mention", "").isEmpty)
   }
 
+  test("moderation Column forms equal the scalar forms") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    import org.apache.spark.sql.functions.col
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    import spark.implicits._
+    // every keyword, overlapping ones (slut/slutt, sex/sexua), the casino
+    // phrase, filler; glued with no separator, a space or a newline, so
+    // keywords repeat and run into each other; any letter may be upper case
+    val words = Moderation.pornKeywords ++ Moderation.pornPointKeywords ++
+      Moderation.casinoKeywords ++ Moderation.notFoundTitles ++
+      Moderation.ageKeywords ++ Seq("slot server", "sussex", "page", "a")
+    val token = for {
+      w <- Gen.oneOf(words)
+      upper <- Gen.listOfN(w.length, Gen.prob(0.3))
+      sep <- Gen.oneOf("", " ", "\n")
+    } yield w.zip(upper).map { case (c, u) => if (u) c.toUpper else c }
+      .mkString + sep
+    val text = Gen.frequency(1 -> Gen.const(null: String),
+      9 -> Gen.listOf(token).map(_.mkString))
+    val t = col("title")
+    val d = col("description")
+    var outcomes = Set.empty[(String, Any)]
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(10).withMaxSize(12),
+      Prop.forAllNoShrink(Gen.listOfN(200, Gen.zip(text, text))) { rows =>
+        val got = rows.toDF("title", "description").select(t, d,
+          Moderation.isSiteNotFoundCol(t), Moderation.isPornBlockedCol(t),
+          Moderation.isCasinoBlockedCol(t, d), Moderation.isValidCol(t, d),
+          Moderation.ageCol(t, d)).collect()
+        val mismatches = got.flatMap { r =>
+          val (ti, de) = (r.getString(0), r.getString(1))
+          val pairs = Seq(
+            "isSiteNotFound" -> (r.get(2), Moderation.isSiteNotFound(ti)),
+            "isPornBlocked" -> (r.get(3), Moderation.isPornBlocked(ti)),
+            "isCasinoBlocked" ->
+              (r.get(4), Moderation.isCasinoBlocked(ti, de)),
+            "isValid" -> (r.get(5), Moderation.isValid(ti, de)),
+            "age" -> (Option(r.get(6)), Moderation.age(ti, de)))
+          outcomes ++= pairs.map { case (name, (_, want)) => name -> want }
+          pairs.collect { case (name, (column, want)) if column != want =>
+            s"$name($ti, $de): column $column, scalar $want" }
+        }
+        mismatches.isEmpty :| mismatches.take(3).mkString("; ")
+      })
+    assert(result.passed, result.status.toString)
+    // every form met both of its outcomes
+    Seq("isSiteNotFound", "isPornBlocked", "isCasinoBlocked", "isValid")
+      .foreach { name =>
+        assert(outcomes(name -> true) && outcomes(name -> false), name)
+      }
+    assert(outcomes("age" -> Some(15)) && outcomes("age" -> None))
+  }
+
   test("moderation keyword quirk: sex matches sesame? no — substring check") {
     // "sex" as substring: "Sussex history" contains "sex" → blocked,
     // faithfully reproducing the reference's substring semantics

@@ -370,16 +370,25 @@ class MlSpec extends AnyFunSuite {
       nodes.map(x => x -> find(x)).toMap
     }
     var deepest = 0
+    def agrees(nodes: Seq[Long], edges: Seq[(Long, Long)], parts: Int) = {
+      val (labels, levels) = Dedup.connectedComponentsLevels(
+        nodes.toDF("id"), edges.toDF("id_a", "id_b").repartition(parts))
+      deepest = math.max(deepest, levels)
+      val rows = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+      val bound = 32 - Integer.numberOfLeadingZeros(parts) // ⌊log₂ p⌋ + 1
+      rows.length == nodes.length && rows.toMap == reference(nodes, edges) &&
+        levels <= bound
+    }
+    // one fixed input deep enough for the depth check below, so it does
+    // not rest on the draw: a 41-node (40-edge) path shuffled over 16
+    // partitions takes 4 levels (≥ 3 is what the check needs)
+    val path = (0L until 40L).map(i => (i, i + 1))
+    assert(agrees(0L to 40L, new scala.util.Random(16).shuffle(path), 16))
+    assert(deepest >= 3, s"the fixed path took $deepest levels")
     val result = Check.check(
       Check.Parameters.default.withMinSuccessfulTests(20).withMaxSize(60),
       Prop.forAllNoShrink(graphs) { case (nodes, edges, parts) =>
-        val (labels, levels) = Dedup.connectedComponentsLevels(
-          nodes.toDF("id"), edges.toDF("id_a", "id_b").repartition(parts))
-        deepest = math.max(deepest, levels)
-        val rows = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
-        val bound = 32 - Integer.numberOfLeadingZeros(parts) // ⌊log₂ p⌋ + 1
-        rows.length == nodes.length && rows.toMap == reference(nodes, edges) &&
-          levels <= bound
+        agrees(nodes, edges, parts)
       })
     assert(result.passed, result.status.toString)
     assert(deepest >= 3, s"no generated graph took more than $deepest levels")
